@@ -444,47 +444,9 @@ def main() -> int:
     # entries; we query immediately after each sample so eviction
     # would only undercount a single sample exceeding ~1000 stages,
     # which none of the battery does.
-    import urllib.request
+    from tools.taskmetrics import GroupMetrics
 
-    _ui = spark.sparkContext.uiWebUrl
-    _app_id = None
-
-    def _group_task_time_s(group_id: str) -> float | None:
-        nonlocal _app_id
-        try:
-            if _app_id is None:
-                apps = json.load(
-                    urllib.request.urlopen(
-                        f"{_ui}/api/v1/applications", timeout=10
-                    )
-                )
-                _app_id = apps[0]["id"]
-            jobs = json.load(
-                urllib.request.urlopen(
-                    f"{_ui}/api/v1/applications/{_app_id}/jobs", timeout=10
-                )
-            )
-            stage_ids = set()
-            for j in jobs:
-                if j.get("jobGroup") == group_id:
-                    stage_ids.update(j.get("stageIds", []))
-            if not stage_ids:
-                return 0.0
-            stages = json.load(
-                urllib.request.urlopen(
-                    f"{_ui}/api/v1/applications/{_app_id}/stages"
-                    "?status=complete",
-                    timeout=10,
-                )
-            )
-            total_ms = sum(
-                s.get("executorRunTime", 0)
-                for s in stages
-                if s.get("stageId") in stage_ids
-            )
-            return round(total_ms / 1000.0, 3)
-        except Exception:  # metrics are best-effort; the wall is not
-            return None
+    metrics = GroupMetrics(spark)
 
     timings: dict[str, float] = {}
     task_times: dict[str, float] = {}
@@ -541,7 +503,7 @@ def main() -> int:
                 spark.sparkContext.setJobGroup("", "")
             wall = time.time() - t0
             samples.append(
-                (wall, _group_task_time_s(group_id) if ui_on else None)
+                (wall, metrics.task_time_s(group_id) if ui_on else None)
             )
         if samples:
             best = min(samples, key=lambda s: s[0])
@@ -591,14 +553,16 @@ def main() -> int:
     local["loadavg_1m"] = round(os.getloadavg()[0], 2)
     local["loadavg_1m_start"] = load_start
     # task_time: per-query executor task-duration sum of the min-wall
-    # sample (see _group_task_time_s) — lets round-over-round analysis
-    # split pin-changed plan deltas from pin-unchanged ambient noise.
+    # sample (tools/taskmetrics.GroupMetrics) — lets round-over-round
+    # analysis split pin-changed plan deltas from pin-unchanged ambient
+    # noise.
     local["task_time"] = task_times
     local["task_time_note"] = (
         "job-group attributed (r13); sums executorRunTime of the "
         "min-wall sample's own stages only; UI eviction "
         "(retainedStages=1000) could undercount only a single sample "
-        "with >1000 stages, none exist in the battery"
+        "with >1000 stages, none exist in the battery; a query whose "
+        "sample ran no stage has no entry"
     )
     if not only:
         with open(

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators import stats
+
 TABLES = (
     "region",
     "nation",
@@ -36,15 +38,9 @@ _MEMO_ATTR = "_sec_edgar_spark_catalog_memo"
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Data-scaled shuffle sizing (operators/partitions.py): every scan
-    # feeds the dataset's input-bytes statistics into
-    # spark.sql.shuffle.partitions so per-task shuffle input stays
-    # bounded as data grows — the engine-behavior fix for the
-    # BENCH_SF100 spill wall.  Runs on every call (memo hits included):
-    # the conf must follow the dataset currently being queried.
-    from .operators.partitions import autosize_shuffle
-
-    autosize_shuffle(spark, sf_dir, table_path=f"{sf_dir}/{name}.parquet")
+    # Every call, memo hits included: the conf must follow the dataset
+    # currently being queried, never what ran earlier in the session.
+    _size_shuffle(spark, sf_dir)
     memo = getattr(spark, _MEMO_ATTR, None)
     if memo is None:
         memo = {}
@@ -93,27 +89,23 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # shapes.  ≥256 rows per spread task keeps small tables on
             # few tasks at any core count while big tables still use
             # the whole executor (50 k rows → the full parallelism).
-            df = df.repartition(_spread_parts(spark, path))
+            df = df.repartition(stats.spread_parts(spark, path))
         memo[key] = df
     return memo[key]
 
 
-SPREAD_ROWS_PER_TASK = 256
-
-
-def _spread_parts(spark: SparkSession, path: str) -> int:
-    """Scan-spread partition count: ceil(rows / SPREAD_ROWS_PER_TASK)
-    clamped to [1, defaultParallelism].  Row count comes from the
-    parquet footer (a metadata read, no Spark job); unreadable footers
-    fall back to the historical defaultParallelism."""
-    par = spark.sparkContext.defaultParallelism
-    try:
-        import pyarrow.parquet as _pq
-
-        rows = _pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return par
-    return max(1, min(par, -(-rows // SPREAD_ROWS_PER_TASK)))
+def _size_shuffle(spark: SparkSession, sf_dir: str) -> None:
+    """Set spark.sql.shuffle.partitions to max(the value the session
+    was built with, the dataset's input-bytes rule).  The build-time
+    value comes from the context's SparkConf, which runtime
+    ``spark.conf.set`` never changes (read in place: ``getConf()``
+    copies the whole conf on every call); 200 is Spark's own
+    default."""
+    conf = spark.sparkContext._conf
+    build = int(conf.get("spark.sql.shuffle.partitions", "200"))
+    eff = max(build, stats.input_partitions(sf_dir, TABLES))
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) != eff:
+        spark.conf.set("spark.sql.shuffle.partitions", str(eff))
 
 
 def _parallelize_tables(spark: SparkSession) -> frozenset[str]:
@@ -129,9 +121,3 @@ def _parallelize_tables(spark: SparkSession) -> frozenset[str]:
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     return tuple(table(spark, sf_dir, n) for n in names)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql callers)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -118,50 +118,6 @@ def shingles(c: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(c), n)
 
 
-def minhash_values(shingle_col: Column, num_hashes: int) -> list[Column]:
-    """MinHash signature: for seed i, min over shingles of
-    md5_hash64(i || ':' || shingle).  Returns one Column per hash.
-
-    Empty shingle sets yield NULL mins — callers filter empty docs first.
-    """
-    def hasher(prefix: str):
-        # NB: the returned lambda must take exactly one parameter —
-        # F.transform treats a second parameter as the element index.
-        return lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit(prefix), s)), 1, 15), 16, 10
-        ).cast("bigint")
-
-    out = []
-    for i in range(num_hashes):
-        out.append(F.array_min(F.transform(shingle_col, hasher(f"{i}:"))))
-    return out
-
-
-def simhash16(token_col: Column) -> Column:
-    """16-bit SimHash over a token array, engine-portable.
-
-    Each token hashes to 60 bits via md5; for each of the 16 low bits we
-    sum +1/-1 votes across tokens; the fingerprint sets bit b iff the
-    vote is positive.  Expressed as a single codegen'd fold.
-    """
-    hashed = F.transform(token_col, lambda t: md5_hash64(t))
-
-    def voter(b: int):
-        # exactly-two-parameter lambda — see hasher() note above
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for b in range(16):
-        vote = F.aggregate(hashed, F.lit(0).cast("long"), voter(b))
-        bits.append(F.when(vote > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for bcol in bits[1:]:
-        out = out + bcol
-    return out
-
-
 def rolling_fingerprint(c: Column | str) -> Column:
     """Polynomial rolling hash over the token stream, mod 2^31-1.
 

@@ -48,18 +48,6 @@ def quantize(a: Column | str, scale: int = 1000) -> Column:
     return F.transform(as_double(a), lambda x: F.round(x * scale).cast("long"))
 
 
-def dot_literal(a: Column | str, vec: list[float]) -> Column:
-    """Left-fold dot of a column vector with literal floats — same
-    fold the oracle SQL writes out explicitly.  The constant vector is
-    one Literal node."""
-    parr = F.lit([float(x) for x in vec])
-    return F.aggregate(
-        F.zip_with(as_double(a), parr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, p: s + p,
-    )
-
-
 def random_projection_sign_bits(a: Column | str, planes: list[list[float]]) -> Column:
     """Sign-bit LSH bucket id from fixed hyperplanes (list of vectors).
 

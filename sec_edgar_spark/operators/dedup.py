@@ -141,27 +141,6 @@ def minhash_signatures(
     return hs.select(F.col(id_col), *_minhash_cols(num_hashes))
 
 
-def minhash_signatures_from_shingles(
-    sh: DataFrame, id_col: str, num_hashes: int
-) -> DataFrame:
-    """Signature computation over pre-built (id, shingle) rows — lets
-    callers share (cache) the shingle explode across signature and
-    exact-verify branches."""
-    base = sh.select(
-        F.col(id_col), (T.md5_hash64(F.col("shingle")) % MINHASH_P).alias("h")
-    )
-    hashed = base.select(
-        F.col(id_col),
-        *[
-            ((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"h{i}")
-            for i, (a, b) in enumerate(MINHASH_COEFFS[:num_hashes])
-        ],
-    )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(num_hashes)]
-    )
-
-
 def minhash_band_keys(
     sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -270,10 +249,6 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     """(id, sh: array<string>) — distinct shingle sets, map-only (the
     per-row array IS the set; no explode + collect_list round trip)."""
     return shingle_arrays(df, id_col, text_col, n)
-
-
-def shingle_sets_from_rows(sh: DataFrame, id_col: str) -> DataFrame:
-    return sh.groupBy(id_col).agg(F.collect_list("shingle").alias("sh"))
 
 
 def fused_doc_frame(
@@ -560,7 +535,7 @@ def blocked_tokens(
 def token_df_stats(
     docs: DataFrame,
     df_cap_pct: int | None,
-    cache_key: tuple | None,
+    path: str | None,
     len_cap: int | None = None,
     probe_key: object = None,
 ) -> tuple[int, int, int, int, int]:
@@ -592,11 +567,12 @@ def token_df_stats(
 
     Two tiny actions over the already-cached docs frame (the probe
     doubles as the cache materializer the main plan needs anyway);
-    memoized per ``cache_key + (df_cap_pct, len_cap, probe_key)`` —
-    ``probe_key`` carries anything that changes the prefix definition
-    (the similarity threshold), since the cap theorems are
-    prefix-independent but the estimates are not."""
-    from .heat import memo_stat
+    memoized per ``path`` (the documents table ``docs`` derives from)
+    and ``(df_cap_pct, len_cap, probe_key)`` — ``probe_key`` carries
+    anything that changes the prefix definition (the similarity
+    threshold), since the cap theorems are prefix-independent but the
+    estimates are not."""
+    from .stats import memo_stat
 
     def compute():
         ndocs = docs.count()
@@ -643,10 +619,8 @@ def token_df_stats(
             int(row["crossp"] or 0),
         )
 
-    if cache_key is None:
-        return compute()
     return memo_stat(
-        cache_key + ("token_df", df_cap_pct, len_cap, probe_key), compute
+        path, ("token_df", df_cap_pct, len_cap, probe_key), compute
     )
 
 
@@ -657,7 +631,7 @@ def prefix_filter_join(
     threshold: float = 0.5,
     posting_df_cap_pct: int | None = None,
     posting_len_cap: int | None = None,
-    cap_stats_key: tuple | None = None,
+    cap_stats_path: str | None = None,
 ) -> DataFrame:
     """EXACT set-similarity self-join (Jaccard >= ``threshold``) via
     prefix filtering (Chaudhuri et al. ICDE'06 / PPJoin, Xiao et al.
@@ -704,8 +678,8 @@ def prefix_filter_join(
     is shorter than L — the usual state on a Zipfian corpus where
     prefixes are rare tokens.  Both caps compose (df-cap first).
 
-    ``cap_stats_key``: dataset identity for memoizing the heat probe
-    (r13, VERDICT r12 #2) — when any cap is requested, an EXACT
+    ``cap_stats_path``: the table ``df`` reads, for memoizing the
+    probe (r13, VERDICT r12 #2) — when any cap is requested, an EXACT
     token-df statistic (one aggregation over the already-cached docs
     frame) decides per cap whether it can possibly bind:
 
@@ -720,7 +694,7 @@ def prefix_filter_join(
     The probe must be exact, not sampled: unlike the salt dispatch
     (bit-identical plans either way), a capped plan differs in ROWS
     whenever a cap binds, so only "max <= cap" — a theorem — licenses
-    skipping it (operators/heat.exact_max_group_rows has the full
+    skipping it (operators/stats.exact_max_group_rows has the full
     argument).  Skipping a provably-non-binding cap never changes
     output; the capped oracle agrees because its QUALIFY/WHERE keep
     every row in that case too.
@@ -756,6 +730,7 @@ def prefix_filter_join(
     )
     need_df_cap = posting_df_cap_pct is not None
     need_len_cap = posting_len_cap is not None
+    cand_parts = None
     if need_df_cap or need_len_cap:
         # exact per-cap dispatch (see docstring): a provably
         # non-binding cap is skipped, a possibly-binding one applied.
@@ -769,7 +744,7 @@ def prefix_filter_join(
         # the pin gate).  Probing first keeps the cache unmaterialized
         # at every plan build, so the plan is one deterministic shape.
         ndocs, max_df, max_unblocked, est_pairs, _ = token_df_stats(
-            docs, posting_df_cap_pct, cap_stats_key, posting_len_cap,
+            docs, posting_df_cap_pct, cap_stats_path, posting_len_cap,
             probe_key=threshold,
         )
         if need_df_cap and 100 * max_df <= posting_df_cap_pct * ndocs:
@@ -783,12 +758,9 @@ def prefix_filter_join(
         # here so the pair shuffle stays inside the per-task sort
         # budget instead of spilling (measured 24 GB of spill at
         # sf100's table-derived 128 partitions).
-        if cap_stats_key is not None:
-            from .partitions import autosize_for_shuffle_bytes
+        from .stats import exchange_partitions
 
-            autosize_for_shuffle_bytes(
-                df.sparkSession, cap_stats_key[0], est_pairs * 32
-            )
+        cand_parts = exchange_partitions(df.sparkSession, est_pairs * 32)
     docs = docs.cache()
     # ^ three consumers (posting + both verify sides); measured 1.5x at
     # sf0.01.  The cache lives until the session drops it — long-lived
@@ -797,6 +769,9 @@ def prefix_filter_join(
     posting = docs.select(
         F.col(id_col), "n", F.explode("prefix").alias("tok")
     )
+    if cand_parts is not None:
+        # the truncation window and the candidate join both reuse it
+        posting = posting.repartition(cand_parts, "tok")
     if need_df_cap:
         # df <= cap%  ==  NOT df > cap%: anti-join the tiny blocked
         # (stopword) set, broadcast — zero shuffle on the posting side

@@ -113,7 +113,7 @@ def capped_recent_join(
     (VERDICT r10 #1); both are now bucket-salted, bit-equal by the
     same fragment-merge argument as salted_sessionize.
     ``bucket_s=None`` keeps steps 1-2 as the classic single-window
-    forms (heat-dispatched via operators.heat.pick_bucket, r11 #1) —
+    forms (heat-dispatched via operators.stats.pick_bucket, r11 #1) —
     the per-left-row candidate cap of steps 3-5 applies either way.
 
     Returns all left columns + right payload columns (the right id and

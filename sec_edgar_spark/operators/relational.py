@@ -87,14 +87,6 @@ def salted_aggregate(
     return partial.groupBy(key).agg(*final_aggs)
 
 
-def grouped_collect(
-    df: DataFrame, key: str, value: Column, out_col: str = "values"
-) -> DataFrame:
-    """A1 group-by-key list aggregation with deterministic (sorted)
-    order — the dict[cik → list] shape of _index.py:174-178."""
-    return df.groupBy(key).agg(F.sort_array(F.collect_list(value)).alias(out_col))
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -174,14 +166,14 @@ def global_rank(df: DataFrame, order_by: list[str]) -> DataFrame:
     though boundary sampling isn't.  Adds column ``rn``.
 
     Partition count is sized by the frame's estimated bytes, clamped
-    to [1, defaultParallelism] (operators/partitions.range_parts,
+    to [1, defaultParallelism] (operators/stats.range_parts,
     r14): ranks are cheap per row, so a small frame in one partition
     beats paying 3 stages × core-count tasks of scheduling overhead;
     a large frame still gets the full parallelism.  The rank VALUE is
     partitioning-independent (unique total order), so this is a pure
     physical choice.
     """
-    from .partitions import range_parts
+    from .stats import range_parts
 
     parts = range_parts(df)
     # lineage_cut pins ONE materialization of the range shuffle:
@@ -252,7 +244,7 @@ def salted_rank(
     ``bucket_s=None`` selects the classic PLAIN single-window rank —
     right when no hot key exists (the salted plan's extra Exchanges
     then cost more than they save); pass
-    ``operators.heat.pick_bucket(...)`` to decide from measured key
+    ``operators.stats.pick_bucket(...)`` to decide from measured key
     heat (VERDICT r11 #1).
     """
     if isinstance(key_cols, str):
@@ -346,7 +338,7 @@ def salted_suffix_min(
     Exact: equal timestamps share a bucket (tie rules stay local) and
     min is associative across the bucket split.  Timestamps must be
     non-null.  ``bucket_s=None`` = plain single-window form (heat-
-    dispatched via operators.heat.pick_bucket, VERDICT r11 #1).
+    dispatched via operators.stats.pick_bucket, VERDICT r11 #1).
     """
     if isinstance(key_cols, str):
         key_cols = [key_cols]
@@ -439,7 +431,7 @@ def salted_prev(
     non-null; payload columns must be orderable types (they ride
     inside the comparison struct).  ``bucket_s=None`` = plain LAG
     single-window form (heat-dispatched via
-    operators.heat.pick_bucket, VERDICT r11 #1).
+    operators.stats.pick_bucket, VERDICT r11 #1).
     """
     if isinstance(key_cols, str):
         key_cols = [key_cols]
@@ -536,7 +528,7 @@ def salted_next(
     no real row can tie it).  Same uniqueness/orderability/non-null-ts
     requirements as salted_prev.  ``bucket_s=None`` = plain LEAD
     single-window form (heat-dispatched via
-    operators.heat.pick_bucket, VERDICT r11 #1)."""
+    operators.stats.pick_bucket, VERDICT r11 #1)."""
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     if bucket_s is None:
@@ -670,7 +662,7 @@ def salted_moving_agg(
             raise ValueError(f"unsupported agg fn {fn!r} for {out!r}")
 
     # bucket_s=None: plain per-key ROWS-frame window (heat-dispatched
-    # via operators.heat.pick_bucket, VERDICT r11 #1)
+    # via operators.stats.pick_bucket, VERDICT r11 #1)
     if bucket_s is None:
         wp = (
             Window.partitionBy(*key_cols)
@@ -774,10 +766,10 @@ def grouped_weighted_cumsum(
     where the range partitioner cuts.  Adds ``out_col``.
 
     Partition count: bytes-derived with a defaultParallelism ceiling
-    (operators/partitions.range_parts, r14 — same rationale as
+    (operators/stats.range_parts, r14 — same rationale as
     global_rank; the running total is partitioning-independent).
     """
-    from .partitions import range_parts
+    from .stats import range_parts
 
     parts = range_parts(df)
     sorted_df = (

@@ -71,7 +71,7 @@ def salted_sessionize(
     merge (a session is the disjoint union of its fragments).
 
     ``bucket_s=None`` = the classic PLAIN single-window lag→flag→cumsum
-    (heat-dispatched via operators.heat.pick_bucket, VERDICT r11 #1) —
+    (heat-dispatched via operators.stats.pick_bucket, VERDICT r11 #1) —
     identical output, one per-user window instead of the two-level
     fragment merge."""
     payload_cols_plain = payload_cols or []

@@ -1,0 +1,305 @@
+"""Plan-time dataset statistics and the physical choices made from them.
+
+Every data-dependent physical decision the engine takes at plan-build
+time reads its inputs here, from one process-lifetime memo:
+
+- **key heat** (``pick_bucket``): sample a key column and pick the
+  salted two-level window plan only when the hottest key is estimated
+  at ≥ ``hot_rows`` rows.  Both plan families are bit-identical
+  (tests/test_salted_rank.py, test_salted_moving_agg.py,
+  test_asof*.py, test_sessionize.py), so a sampled estimate has no
+  correctness exposure; the threshold is absolute because a straggler
+  is one task sorting the hot key's whole stream (sf10-skew hot user =
+  3M rows → salted; uniform sf10 max user ≈ 4k rows → plain).
+- **cap binding** (``exact_max_group_rows``): capped and uncapped plans
+  differ in ROWS whenever a cap binds, so only the theorem "exact max
+  group size <= cap" may skip a cap — this probe is exact.
+- **input-bytes shuffle sizing** (``input_partitions``): a pure
+  function of the dataset — next power of two ≥ (largest table's
+  on-disk bytes) / 6 MiB.  Calibration: the sf100 documents table
+  (~792 MB) lands on 128, the partition count BENCH_SF100 measured as
+  restoring linear scaling, while sf10 (~80 MB) stays at the session
+  floor.  ``catalog.table`` applies it as
+  ``max(build-time shuffle partitions, rule)``, so the value a plan
+  gets never depends on which queries ran earlier in the session.
+- **operator shuffle sizing** (``exchange_partitions``): operators that
+  can bound their own shuffle volume (the posting-cap candidate join,
+  from the exact token-df probe) size THEIR exchange with an explicit
+  ``repartition(n, key)`` — only when ``n`` exceeds the session's
+  partitions, so small scales keep their plans byte for byte.
+- **explicit repartitions** (``range_parts``) and **scan spread**
+  (``spread_parts``): sized from Catalyst's byte estimate and the
+  parquet footer row count, clamped to ``defaultParallelism``, so
+  tiny frames stop fanning out to core-count tasks.
+
+Memo keys are built here, never by callers: ``(path,
+dataset_fingerprint(path), statistic)``.  Callers pass the table path
+the statistic describes; an in-place rewrite of that path changes the
+fingerprint and re-probes instead of serving a stale value.  The memo
+is the moral equivalent of persisted table statistics (ANALYZE): a
+bench or gate process probes each dataset once.
+"""
+
+from __future__ import annotations
+
+import os
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# default absolute hot threshold (rows held by the hottest key)
+HOT_ROWS_DEFAULT = 1_000_000
+# default probe sample fraction: at the 1M-row threshold the sampled
+# count is ~20k ± 140 (binomial), so the decision is sharp
+SAMPLE_FRAC_DEFAULT = 0.02
+SEED = 1337
+
+BYTES_PER_PARTITION_DEFAULT = 6 * 1024 * 1024
+# Target for DIRECTLY-ESTIMATED shuffle bytes (exchange_partitions).
+# Calibrated by the r13 sf100 partition sweep on the posting-cap
+# candidate exchange (19.7 GB of pair rows): 128 partitions = 385 s
+# with 24 GB of sort spill; 512 = 342 s cold / no spill (the sweet
+# spot); 1024 grazed the 8 GiB local heap; 4096 REGRESSED 39% task
+# time — bucket over-provisioning defeats map-side combine.  128 MiB
+# of estimated shuffle per task lands that operator's estimate
+# (1-2e9 pairs × 32 B, a ≤2× upper bound on the measured volume) on
+# 512 at sf100 and below the session's partitions at gate scale.
+SHUFFLE_BYTES_PER_PARTITION_DEFAULT = 128 * 1024 * 1024
+HI_DEFAULT = 4096
+RANGE_BYTES_PER_PARTITION_DEFAULT = 16 * 1024 * 1024
+SPREAD_ROWS_PER_TASK = 256
+
+# (path, fingerprint, statistic) -> value; process-lifetime, like a
+# statistics catalog.  Never keyed by DataFrame (plans don't hash
+# usefully) and never cleared by spark.catalog.clearCache().
+_MEMO: dict[tuple, object] = {}
+
+
+def dataset_fingerprint(path: str) -> tuple | None:
+    """Cheap identity of a parquet dataset for memo keying: one
+    os.scandir giving (file count, max mtime_ns, total bytes), which
+    changes on any overwrite or append; single-file datasets stat the
+    file.  None when the path isn't local (remote stores fall back to
+    ``clear_cache()``).  The third field doubles as the table's
+    on-disk size for the input-bytes rule."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (1, st.st_mtime_ns, st.st_size)
+        n, mx, total = 0, 0, 0
+        with os.scandir(path) as it:
+            for e in it:
+                st = e.stat()
+                n += 1
+                mx = max(mx, st.st_mtime_ns)
+                total += st.st_size
+        return (n, mx, total)
+    except OSError:
+        return None
+
+
+def memo_stat(path: str | None, stat: tuple, compute):
+    """``compute()`` memoized under ``(path, dataset_fingerprint(path),
+    stat)``; ``path`` None computes without memoizing."""
+    if path is None:
+        return compute()
+    key = (path, dataset_fingerprint(path), stat)
+    if key not in _MEMO:
+        _MEMO[key] = compute()
+    return _MEMO[key]
+
+
+def clear_cache() -> None:
+    """Drop memoized statistics (tests; remote datasets rewritten)."""
+    _MEMO.clear()
+
+
+def _cols(key_cols: list[str] | str) -> list[str]:
+    return [key_cols] if isinstance(key_cols, str) else list(key_cols)
+
+
+def estimated_max_key_rows(
+    df: DataFrame,
+    key_cols: list[str] | str,
+    sample_frac: float = SAMPLE_FRAC_DEFAULT,
+    seed: int = SEED,
+) -> float:
+    """Estimated row count of the hottest key: one tiny job over the
+    key columns (column-pruned scan, fixed-seed sample, map-side
+    combined count, scalar max) scaled by ``1 / sample_frac``.
+
+    NULL keys group together like any other value — a hot NULL key is
+    still a straggler in a per-key window."""
+    key_cols = _cols(key_cols)
+    if not 0 < sample_frac <= 1:
+        raise ValueError(f"sample_frac must be in (0, 1], got {sample_frac}")
+    mx = (
+        df.select(*key_cols)
+        .sample(fraction=sample_frac, seed=seed)
+        .groupBy(*key_cols)
+        .count()
+        .agg(F.max("count").alias("_mx"))
+        .first()["_mx"]
+    )
+    return (mx or 0) / sample_frac
+
+
+def pick_bucket(
+    df: DataFrame,
+    key_cols: list[str] | str,
+    bucket_s: int = 6 * 3600,
+    hot_rows: int = HOT_ROWS_DEFAULT,
+    sample_frac: float = SAMPLE_FRAC_DEFAULT,
+    path: str | None = None,
+) -> int | None:
+    """The salt dispatch: ``bucket_s`` (salted plan) if the hottest key
+    is estimated ≥ ``hot_rows`` rows, else ``None`` (plain
+    single-window plan) — plugs straight into the salted family's
+    ``bucket_s`` parameter.  ``path``: the table ``df`` reads, so one
+    probe per dataset serves every query of a process."""
+    est = memo_stat(
+        path,
+        ("max_key_rows", *_cols(key_cols)),
+        lambda: estimated_max_key_rows(df, key_cols, sample_frac=sample_frac),
+    )
+    return bucket_s if est >= hot_rows else None
+
+
+def exact_max_group_rows(
+    df: DataFrame,
+    key_cols: list[str] | str,
+    path: str | None = None,
+    tag: str = "",
+) -> int:
+    """EXACT row count of the hottest group (one map-side-combined
+    aggregation job; scalar result).
+
+    Why exact (r13, cap-family dispatch): the salt dispatch may sample
+    because both plans are bit-identical.  The CAP families (block,
+    posting and sub-cell caps) are different: capped and uncapped plans
+    produce different ROWS whenever a cap binds, so the only dispatch
+    condition safe against the static capped oracle is the THEOREM
+    "exact max group size <= cap" — the cap cannot bind, capped ==
+    uncapped bit for bit, and the cheaper uncapped plan may run.  A
+    sampled probe at the threshold could pick the uncapped plan while
+    the cap binds, silently changing results.
+
+    ``path``: the table ``df`` derives from; ``tag`` names the derived
+    frame when ``key_cols`` alone would not (e.g. a k-means cell)."""
+    def compute():
+        mx = (
+            df.groupBy(*_cols(key_cols))
+            .count()
+            .agg(F.max("count").alias("_mx"))
+            .first()["_mx"]
+        )
+        return int(mx or 0)
+
+    return memo_stat(
+        path, ("exact_max_group", tag, *_cols(key_cols)), compute
+    )
+
+
+def suggest_shuffle_partitions(
+    nbytes: int,
+    bytes_per_partition: int = BYTES_PER_PARTITION_DEFAULT,
+    lo: int = 1,
+    hi: int = HI_DEFAULT,
+) -> int:
+    """Pure sizing rule: next power of two ≥ nbytes/bytes_per_partition,
+    clamped to [lo, hi].  Monotone in nbytes; stable under small jitter
+    (power-of-two rounding); ``hi`` is a runaway guard a real cluster
+    raises with executor count."""
+    if bytes_per_partition <= 0:
+        raise ValueError("bytes_per_partition must be positive")
+    need = max(1, -(-max(nbytes, 0) // bytes_per_partition))  # ceil div
+    p = 1
+    while p < need:
+        p *= 2
+    return max(lo, min(p, hi))
+
+
+def input_partitions(sf_dir: str, tables) -> int:
+    """The dataset's input-bytes rule: ``suggest_shuffle_partitions`` of
+    its largest table's on-disk bytes (``{sf_dir}/{name}.parquet`` for
+    each name in ``tables``; unreadable tables count 0).  A query is
+    sized by the largest table it could read, whatever the session
+    touched first.  Memoized under ``sf_dir``'s fingerprint."""
+    def compute():
+        sizes = (
+            (dataset_fingerprint(f"{sf_dir}/{t}.parquet") or (0, 0, 0))[2]
+            for t in tables
+        )
+        return suggest_shuffle_partitions(max(sizes, default=0))
+
+    return memo_stat(sf_dir, ("input_partitions", tuple(tables)), compute)
+
+
+def exchange_partitions(
+    spark: SparkSession, est_shuffle_bytes: int
+) -> int | None:
+    """Partition count for an operator's own exchange sized from its
+    shuffle-volume estimate, or None when the session's
+    ``spark.sql.shuffle.partitions`` already covers it.
+
+    The input-bytes rule cannot see shuffle amplification: the
+    posting-cap candidate join shuffles ~25× its input table at sf100
+    (19.7 GB of pairs off a 792 MB scan), so a table-sized count left
+    154 MB/task and 24 GB of spill.  The caller applies the number as
+    ``repartition(n, key)`` on that exchange only — AQE never
+    coalesces an explicit count, and no session state changes."""
+    n = suggest_shuffle_partitions(
+        est_shuffle_bytes, SHUFFLE_BYTES_PER_PARTITION_DEFAULT
+    )
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return n if n > cur else None
+
+
+def plan_bytes(df) -> int | None:
+    """Catalyst's estimated size of a DataFrame's optimized plan, in
+    bytes (``sizeInBytes`` statistics — file-size-derived for scans,
+    width-scaled for projections; never triggers a job).  None when the
+    estimate is unavailable."""
+    try:
+        b = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return b if b >= 0 else None
+    except Exception:
+        return None
+
+
+def range_parts(
+    df,
+    bytes_per_partition: int = RANGE_BYTES_PER_PARTITION_DEFAULT,
+) -> int:
+    """Partition count for an EXPLICIT repartition (range or hash) that
+    AQE cannot coalesce: sized by the plan's estimated input bytes and
+    clamped to ``[1, defaultParallelism]`` (VERDICT r13 #1).
+
+    The historical choice — ``defaultParallelism`` unconditionally —
+    made tiny-frame operators pay per-task scheduling overhead
+    PROPORTIONAL TO CORE COUNT (a 2 000-row rank sharded 32 ways runs
+    3 stages × 32 tasks of microsecond work).  Catalyst's estimate is
+    conservative without CBO (filters don't shrink it), so genuinely
+    large inputs keep the full ``defaultParallelism`` while provably
+    small frames stop fanning out."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    b = plan_bytes(df)
+    if b is None:
+        return par
+    need = -(-b // max(bytes_per_partition, 1))  # ceil div
+    return max(1, min(par, need))
+
+
+def spread_parts(spark: SparkSession, path: str) -> int:
+    """Scan-spread partition count: ceil(rows / SPREAD_ROWS_PER_TASK)
+    clamped to [1, defaultParallelism].  Row count comes from the
+    parquet footer (a metadata read, no Spark job); unreadable footers
+    fall back to defaultParallelism."""
+    par = spark.sparkContext.defaultParallelism
+    try:
+        import pyarrow.parquet as _pq
+
+        rows = _pq.ParquetFile(path).metadata.num_rows
+    except Exception:
+        return par
+    return max(1, min(par, -(-rows // SPREAD_ROWS_PER_TASK)))

@@ -82,19 +82,6 @@ def token_aggregates(
     return tok.groupBy(id_col).agg(*aggs)
 
 
-def doc_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, n_tokens, n_bpe_tokens, n_alpha, n_punct, n_chars_measured)
-    — single-pass character/token statistics, all codegen'd."""
-    return df.select(
-        F.col(id_col),
-        T.token_count(text_col).alias("n_tokens"),
-        T.bpe_token_count(text_col).alias("n_bpe_tokens"),
-        T.alpha_chars(text_col).alias("n_alpha"),
-        T.punct_chars(text_col).alias("n_punct"),
-        F.length(text_col).alias("n_chars_measured"),
-    )
-
-
 def compression_ratios(
     df: DataFrame, id_col: str, text_col: str, level: int = 6
 ) -> DataFrame:

@@ -2,7 +2,7 @@
 
 Every per-key event window in the battery keys on ``events.user_id``,
 so one probe per dataset serves all of them: the first query in a
-process pays one column-pruned sampled scan (operators/heat.py), the
+process pays one column-pruned sampled scan (operators/stats.py), the
 rest hit the memoized estimate — the moral equivalent of persisted
 table statistics.  The returned value plugs straight into the salted
 family's ``bucket_s`` parameter (int = salted two-level plan, None =
@@ -19,10 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-import os
-
 from ..catalog import table
-from ..operators.heat import dataset_fingerprint, pick_bucket
+from ..operators.stats import pick_bucket
 
 
 def events_user_bucket(
@@ -30,14 +28,11 @@ def events_user_bucket(
 ) -> int | None:
     """Probe (memoized per dataset STATE, not just path) →
     ``bucket_s`` if events.user_id has a hot key, else ``None``.
-
-    The cache key folds in a directory fingerprint (file count / max
-    mtime / bytes), so rewriting events.parquet in place re-probes
-    instead of serving a stale decision (ADVICE r12)."""
-    fp = dataset_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    Rewriting events.parquet in place re-probes instead of serving a
+    stale decision (ADVICE r12)."""
     return pick_bucket(
         table(spark, sf_dir, "events"),
         "user_id",
         bucket_s=bucket_s,
-        cache_key=(sf_dir, "events", "user_id", fp),
+        path=f"{sf_dir}/events.parquet",
     )

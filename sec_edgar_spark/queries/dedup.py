@@ -24,19 +24,6 @@ from ..functions import text as T
 from .registry import QUERIES, query
 
 
-def _doc_stats_key(sf_dir: str) -> tuple:
-    """Dataset identity for the posting-cap heat probe (r13): path +
-    directory fingerprint, so the memoized token-df statistic
-    self-heals on an in-place rewrite (same contract as the salt
-    dispatch, queries/_heat.py)."""
-    from ..operators.heat import dataset_fingerprint
-
-    return (
-        sf_dir,
-        "documents",
-        dataset_fingerprint(f"{sf_dir}/documents.parquet"),
-    )
-
 NUM_MINHASHES = 12
 BANDS = 4  # 3 hashes per band
 ROWS_PER_BAND = NUM_MINHASHES // BANDS
@@ -1136,7 +1123,7 @@ def dedup_prefix_filter_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", threshold=_PF_T,
         posting_df_cap_pct=_DF_CAP_PCT,
         posting_len_cap=_LEN_CAP,
-        cap_stats_key=_doc_stats_key(sf_dir),
+        cap_stats_path=f"{sf_dir}/documents.parquet",
     )
 
 
@@ -1288,12 +1275,13 @@ def _containment_pairs(
     # materialized it at build time on the first construction only,
     # flipping join strategies between probe-fresh and memo-hit plans).
     need_df_cap = need_len_cap = df_cap_pct is not None
+    cand_parts = None
     if df_cap_pct is not None:
         from ..operators.dedup import token_df_stats
-        from ..operators.partitions import autosize_for_shuffle_bytes
+        from ..operators.stats import exchange_partitions
 
         ndocs_st, max_df, max_unblocked, _, est_pairs = token_df_stats(
-            docs, df_cap_pct, _doc_stats_key(sf_dir), _LEN_CAP,
+            docs, df_cap_pct, f"{sf_dir}/documents.parquet", _LEN_CAP,
             probe_key=_CONT_T,
         )
         if 100 * max_df <= df_cap_pct * ndocs_st:
@@ -1304,7 +1292,7 @@ def _containment_pairs(
         # the small×big candidate exchange is the CROSS estimate
         # Σ min(dfp, L)·min(df, L) (≈32 B/pair) — see
         # prefix_filter_join / token_df_stats
-        autosize_for_shuffle_bytes(spark, sf_dir, est_pairs * 32)
+        cand_parts = exchange_partitions(spark, est_pairs * 32)
     docs = docs.cache()
     small = docs.select(
         F.col("doc_id"), "n", F.explode("prefix").alias("tok")
@@ -1312,6 +1300,10 @@ def _containment_pairs(
     big = docs.select(
         F.col("doc_id"), "n", F.explode("toks_ord").alias("tok")
     )
+    if cand_parts is not None:
+        # the truncation windows and the candidate join reuse it
+        small = small.repartition(cand_parts, "tok")
+        big = big.repartition(cand_parts, "tok")
     if need_df_cap or need_len_cap:
         # Same in-plan df cap as prefix_filter_join's
         # posting_df_cap_pct, inverted into its cheap form: "keep

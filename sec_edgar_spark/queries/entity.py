@@ -332,21 +332,17 @@ def er_match_score_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "hottest block <= cap" is a THEOREM that capped == uncapped
     # (zero forfeit), so the uncapped plan is safe against the capped
     # oracle; a SAMPLED estimate would not be (a wrong not-hot call
-    # silently changes rows) — operators/heat.exact_max_group_rows
+    # silently changes rows) — operators/stats.exact_max_group_rows
     # has the full argument.  Uniform corpora skip the machinery and
     # provably forfeit nothing; hot corpora (fixed-vocabulary
     # replicas) dispatch capped.
-    from ..operators.heat import dataset_fingerprint, exact_max_group_rows
+    from ..operators.stats import exact_max_group_rows
 
     hottest = exact_max_group_rows(
         k,
         ["p_type", "p_size", "tok1"],
-        cache_key=(
-            sf_dir,
-            "part",
-            "er_block",
-            dataset_fingerprint(f"{sf_dir}/part.parquet"),
-        ),
+        path=f"{sf_dir}/part.parquet",
+        tag="er_block",
     )
     if hottest <= _BLOCK_CAP:
         small = k

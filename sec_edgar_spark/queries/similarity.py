@@ -920,20 +920,13 @@ def dedup_semantic_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row (the splitter's fixed-point hash times (n+cap-1) DIV cap = 1
     # lands in [0,1)), so the sizes-join + hash machinery is dead and
     # the uncapped plan emits the same rows the capped oracle computes.
-    # Must be exact, not sampled (operators/heat.exact_max_group_rows):
+    # Must be exact, not sampled (operators/stats.exact_max_group_rows):
     # a wrong not-hot call would change rows.  Memoized per dataset
     # fingerprint — one probe serves every invocation in a process.
-    from ..operators.heat import dataset_fingerprint, exact_max_group_rows
+    from ..operators.stats import exact_max_group_rows
 
     hottest = exact_max_group_rows(
-        keyed,
-        "cell",
-        cache_key=(
-            sf_dir,
-            "embeddings",
-            "sem_cell",
-            dataset_fingerprint(f"{sf_dir}/embeddings.parquet"),
-        ),
+        keyed, "cell", path=f"{sf_dir}/embeddings.parquet", tag="sem_cell"
     )
     # cache AFTER the probe (plan determinism — prefix_filter_join has
     # the full argument: probing through the registered cache

@@ -1,24 +1,26 @@
-"""Input-bytes-derived shuffle sizing (operators/partitions.py).
+"""Data-scaled shuffle sizing (operators/stats.py).
 
 VERDICT r12 #1: the BENCH_SF100 spill wall (fixed 32 partitions →
 14.4×/decade) must be fixed by engine behavior, not per-run bench
 conf.  These tests pin the pure sizing rule on synthetic file
-layouts and the session integration contract (floor, per-dataset
-max, no ratchet, operator override).
+layouts and the session contract: the dataset's input-bytes rule,
+floored at the session's build-time partitions, is a pure function of
+the dataset — a plan never depends on what ran earlier in the session.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from sec_edgar_spark.operators.partitions import (
+from sec_edgar_spark import catalog
+from sec_edgar_spark.operators import stats
+from sec_edgar_spark.operators.stats import (
     BYTES_PER_PARTITION_DEFAULT,
-    autosize_shuffle,
     suggest_shuffle_partitions,
-    table_bytes,
-    _STATE_ATTR,
 )
 
 MiB = 1024 * 1024
@@ -69,13 +71,13 @@ def test_bad_bpp_raises():
         suggest_shuffle_partitions(100, bytes_per_partition=0)
 
 
-# ------------------------------------------------------------- table_bytes
+# ------------------------------------------------------------- table bytes
 
 
 def test_table_bytes_single_file(tmp_path):
     p = tmp_path / "t.parquet"
     p.write_bytes(b"x" * 1234)
-    assert table_bytes(str(p)) == 1234
+    assert stats.dataset_fingerprint(str(p))[2] == 1234
 
 
 def test_table_bytes_directory_of_parts(tmp_path):
@@ -83,135 +85,79 @@ def test_table_bytes_directory_of_parts(tmp_path):
     d.mkdir()
     for i, sz in enumerate([100, 200, 300]):
         (d / f"part-{i}.parquet").write_bytes(b"x" * sz)
-    assert table_bytes(str(d)) == 600
+    assert stats.dataset_fingerprint(str(d))[2] == 600
 
 
 def test_table_bytes_missing_path_is_zero(tmp_path):
-    assert table_bytes(str(tmp_path / "nope.parquet")) == 0
+    # unreadable tables count 0 bytes: the rule stands down to lo=1
+    assert stats.input_partitions(str(tmp_path), ["nope"]) == 1
 
 
 # ------------------------------------------------------- session contract
 
 
-def _fake_dataset(tmp_path, name, nbytes):
-    # Sparse file: the sizing rule only reads st_size, and materializing
-    # the bytes made the two 1 GB fixtures the suite's #3/#5 slowest
-    # tests (177 s + 112 s of disk writes for a size-stat check).
+def _build_partitions(spark) -> int:
+    return int(
+        spark.sparkContext.getConf().get("spark.sql.shuffle.partitions", "200")
+    )
+
+
+def _fake_dataset(tmp_path, name, lineitem_bytes):
+    """A dataset dir holding a real (tiny) region table and a sparse
+    lineitem file: the sizing rule only reads st_size, and only region
+    is ever scanned."""
     d = tmp_path / name
-    d.mkdir(exist_ok=True)
-    p = d / "events.parquet"
-    with open(p, "wb") as fh:
-        if nbytes:
-            fh.seek(nbytes - 1)
+    d.mkdir()
+    pq.write_table(pa.table({"r_regionkey": [0]}), str(d / "region.parquet"))
+    with open(d / "lineitem.parquet", "wb") as fh:
+        if lineitem_bytes:
+            fh.seek(lineitem_bytes - 1)
             fh.write(b"\0")
     return str(d)
 
 
-def _reset(spark):
-    if hasattr(spark, _STATE_ATTR):
-        delattr(spark, _STATE_ATTR)
-
-
-def test_floor_is_session_value_and_big_data_raises(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-    _reset(spark)
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+def test_floor_is_session_value_and_big_data_raises(spark, tmp_path):
+    base = _build_partitions(spark)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         small = _fake_dataset(tmp_path, "small", 10)
-        eff = autosize_shuffle(
-            spark, small, table_path=os.path.join(small, "events.parquet")
+        catalog.table(spark, small, "region")
+        # a small dataset never lowers or raises the session's value
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
+        # ~1 GB lineitem, never scanned: 6 MiB/partition → 160 → 256
+        big = _fake_dataset(tmp_path, "big", 10**9)
+        catalog.table(spark, big, "region")
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == max(
+            base, 256
         )
-        assert eff == base  # small table never lowers or raises the floor
-        # a "big" table: 1000 bytes at 10 bytes/partition → 100 → 128
-        big = _fake_dataset(tmp_path, "big", 1000)
-        eff = autosize_shuffle(
-            spark,
-            big,
-            table_path=os.path.join(big, "events.parquet"),
-            bytes_per_partition=10,
-        )
-        assert eff == max(base, 128)
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == eff
         # switching back to the small dataset re-sizes DOWN (no ratchet)
-        eff = autosize_shuffle(
-            spark, small, table_path=os.path.join(small, "events.parquet")
-        )
-        assert eff == base
+        catalog.table(spark, small, "region")
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
     finally:
-        _reset(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(base))
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_dataset_effective_is_max_over_touched_tables(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-    _reset(spark)
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+def test_dataset_rule_is_largest_table_whatever_touch_order(tmp_path):
+    # ~1 GB at 6 MiB/partition → 160 → 256, whichever table comes first
+    # (the floor test shows catalog.table sizing by a never-scanned
+    # lineitem while only region is read)
+    d = _fake_dataset(tmp_path, "ds", 10**9)
+    for names in (["region", "lineitem"], ["lineitem", "region"]):
+        assert stats.input_partitions(d, names) == 256
+
+
+def test_catalog_wires_autosize(spark):
+    """catalog.table() applies the dataset rule on every call: gate-scale
+    data stays at the session's build-time value (the r12 'gate bench
+    within noise' criterion), whatever a runtime write left behind."""
+    base = _build_partitions(spark)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        d = tmp_path / "ds"
-        d.mkdir()
-        (d / "small.parquet").write_bytes(b"x" * 10)
-        (d / "large.parquet").write_bytes(b"x" * 5000)
-        eff1 = autosize_shuffle(
-            spark, str(d), table_path=str(d / "large.parquet"),
-            bytes_per_partition=10,
-        )
-        assert eff1 == max(base, 512)
-        # touching the small table afterwards keeps the dataset max:
-        # a query is sized by the largest table it reads
-        eff2 = autosize_shuffle(
-            spark, str(d), table_path=str(d / "small.parquet"),
-            bytes_per_partition=10,
-        )
-        assert eff2 == eff1
-    finally:
-        _reset(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(base))
-
-
-def test_env_pin_disables(spark, tmp_path, monkeypatch):
-    _reset(spark)
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
-    try:
-        big = _fake_dataset(tmp_path, "pinned", 10**9)
-        assert autosize_shuffle(
-            spark, big, table_path=os.path.join(big, "events.parquet")
-        ) is None
-    finally:
-        _reset(spark)
-
-
-def test_conf_disables(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-    _reset(spark)
-    spark.conf.set("spark.sec_edgar.autosize_shuffle", "false")
-    try:
-        big = _fake_dataset(tmp_path, "off", 10**9)
-        assert autosize_shuffle(
-            spark, big, table_path=os.path.join(big, "events.parquet")
-        ) is None
-    finally:
-        spark.conf.unset("spark.sec_edgar.autosize_shuffle")
-        _reset(spark)
-
-
-def test_catalog_wires_autosize(spark, monkeypatch):
-    """catalog.table() feeds the scan into the autosizer: gate-scale
-    data stays at the session floor (the r12 'gate bench within noise'
-    criterion is this property)."""
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-    _reset(spark)
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        from sec_edgar_spark import catalog
-
         sf = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
         if not os.path.exists(sf):
             pytest.skip("driver testdata not present")
+        spark.conf.set("spark.sql.shuffle.partitions", "999")
         catalog.table(spark, sf, "events")
-        state = getattr(spark, _STATE_ATTR)
-        assert sf in state["sugg"]  # the scan was sized
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
     finally:
-        _reset(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(base))
+        spark.conf.set("spark.sql.shuffle.partitions", old)

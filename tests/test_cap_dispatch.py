@@ -1,6 +1,6 @@
 """Exact heat dispatch for the cap families (VERDICT r12 #2).
 
-The salt dispatch (operators/heat.pick_bucket) may sample because both
+The salt dispatch (operators/stats.pick_bucket) may sample because both
 plan families are bit-identical.  The CAP families are not: capped
 plans drop rows whenever a cap binds, so the only safe dispatch is the
 THEOREM "exact max group size <= cap ⟹ capped == uncapped".  These
@@ -10,15 +10,19 @@ tests pin:
 - that a provably-non-binding cap is skipped (plan-level),
 - that dispatched and forced-capped plans produce identical rows on
   corpora where the cap does not bind (the gate condition),
-- that a binding cap still dispatches capped.
+- that a binding cap still dispatches capped,
+- that a huge pair estimate sizes only the query's own candidate
+  exchange: a later unrelated plan is unchanged.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from sec_edgar_spark.operators import heat
+from sec_edgar_spark.operators import stats
 from sec_edgar_spark.operators.dedup import prefix_filter_join
 
 SF = "/root/testdata/sf0.001"
@@ -37,25 +41,26 @@ def _rows(df):
 
 def test_exact_max_group_rows_value(spark):
     df = spark.createDataFrame([(1,), (1,), (1,), (2,)], "k int")
-    assert heat.exact_max_group_rows(df, "k") == 3
+    assert stats.exact_max_group_rows(df, "k") == 3
 
 
 def test_exact_max_group_rows_empty(spark):
     df = spark.createDataFrame([], "k int")
-    assert heat.exact_max_group_rows(df, "k") == 0
+    assert stats.exact_max_group_rows(df, "k") == 0
 
 
 def test_exact_probe_memoizes_like_statistics(spark):
-    heat.clear_cache()
+    stats.clear_cache()
     try:
         df = spark.createDataFrame([(1,), (1,), (2,)], "k int")
-        assert heat.exact_max_group_rows(df, "k", cache_key=("t", "k")) == 2
-        # same key, different frame → cached value (stats semantics)
+        assert stats.exact_max_group_rows(df, "k", path="t") == 2
+        # same path, different frame → cached value (stats semantics)
         df7 = spark.createDataFrame([(9,)] * 7, "k int")
-        assert heat.exact_max_group_rows(df7, "k", cache_key=("t", "k")) == 2
-        assert heat.exact_max_group_rows(df7, "k", cache_key=("t2", "k")) == 7
+        assert stats.exact_max_group_rows(df7, "k", path="t") == 2
+        assert stats.exact_max_group_rows(df7, "k", path="t2") == 7
+        assert stats.exact_max_group_rows(df7, "k", path="t", tag="x") == 7
     finally:
-        heat.clear_cache()
+        stats.clear_cache()
 
 
 # -------------------------------------------------- posting-cap dispatch
@@ -117,7 +122,7 @@ def test_binding_df_cap_stays_and_subsets(spark):
 def test_token_df_stats_memoized_per_key(spark):
     from sec_edgar_spark.operators.dedup import token_df_stats
 
-    heat.clear_cache()
+    stats.clear_cache()
     try:
         d = _mini_docs(spark)
         docs = (
@@ -126,14 +131,14 @@ def test_token_df_stats_memoized_per_key(spark):
             .groupBy("doc_id")
             .agg(F.collect_list("tok").alias("toks_ord"))
         )
-        st = token_df_stats(docs, 50, cache_key=("mini",))
+        st = token_df_stats(docs, 50, path="mini")
         assert st[0] == 6 and st[1] == 4  # ndocs, max df ("common")
         assert st[2] <= 4  # max unblocked df
         # memo: different frame, same key → cached tuple
         empty = docs.filter(F.lit(False))
-        assert token_df_stats(empty, 50, cache_key=("mini",)) == st
+        assert token_df_stats(empty, 50, path="mini") == st
     finally:
-        heat.clear_cache()
+        stats.clear_cache()
 
 
 # ------------------------------------------------- query-level dispatch
@@ -144,7 +149,7 @@ def _force_hot(monkeypatch):
     hottest group (the probe itself is exact; this simulates a hot
     corpus so both branches can be compared on the same data)."""
     monkeypatch.setattr(
-        heat, "exact_max_group_rows", lambda *a, **k: 10**9
+        stats, "exact_max_group_rows", lambda *a, **k: 10**9
     )
 
 
@@ -154,7 +159,7 @@ def _force_hot(monkeypatch):
 def test_er_capped_dispatch_equals_forced_capped(spark, monkeypatch):
     from sec_edgar_spark.queries import QUERIES
 
-    heat.clear_cache()
+    stats.clear_cache()
     try:
         dispatched = _rows(QUERIES["er_match_score_capped"](spark, SF))
         _force_hot(monkeypatch)
@@ -163,7 +168,7 @@ def test_er_capped_dispatch_equals_forced_capped(spark, monkeypatch):
         assert dispatched == forced
         assert len(dispatched) > 0
     finally:
-        heat.clear_cache()
+        stats.clear_cache()
 
 
 @pytest.mark.skipif(
@@ -172,7 +177,7 @@ def test_er_capped_dispatch_equals_forced_capped(spark, monkeypatch):
 def test_semantic_capped_dispatch_equals_forced_capped(spark, monkeypatch):
     from sec_edgar_spark.queries import QUERIES
 
-    heat.clear_cache()
+    stats.clear_cache()
     try:
         dispatched = QUERIES["dedup_semantic_capped"](spark, SF)
         assert "sub" in dispatched.columns
@@ -181,7 +186,7 @@ def test_semantic_capped_dispatch_equals_forced_capped(spark, monkeypatch):
         f_rows = _rows(QUERIES["dedup_semantic_capped"](spark, SF))
         assert d_rows == f_rows
     finally:
-        heat.clear_cache()
+        stats.clear_cache()
         spark.catalog.clearCache()
 
 
@@ -227,63 +232,85 @@ def test_token_df_stats_est_pairs(spark):
 
 
 def test_prefix_filter_join_reports_pair_volume(spark, monkeypatch):
-    """The capped join must report est_pairs×32 B to the operator-level
-    sizer under the dataset key (cap_stats_key[0]); rows unchanged."""
-    from sec_edgar_spark.operators import partitions as P
-
+    """The capped join sizes its own candidate exchange from
+    est_pairs×32 B: a count above the session's partitions becomes a
+    repartition on the posting token; rows unchanged."""
     calls = []
-    monkeypatch.setattr(
-        P,
-        "autosize_for_shuffle_bytes",
-        lambda spark_, key, nbytes, **kw: calls.append((key, nbytes)),
-    )
-    heat.clear_cache()
+
+    def sizer(spark_, nbytes, **kw):
+        calls.append(nbytes)
+        return 16
+
+    monkeypatch.setattr(stats, "exchange_partitions", sizer)
+    stats.clear_cache()
     try:
         d = _mini_docs(spark)
         capped = prefix_filter_join(
             d, "doc_id", "text", threshold=0.5,
-            posting_len_cap=2, cap_stats_key=("ds-x", "documents"),
+            posting_len_cap=2, cap_stats_path="ds-x/documents.parquet",
         )
         plain = prefix_filter_join(d, "doc_id", "text", threshold=0.5)
-        assert calls and calls[0][0] == "ds-x" and calls[0][1] > 0
-        assert calls[0][1] % 32 == 0
-        # sizing is physical only: binding cap still subsets, plain
-        # results unchanged by the report
+        assert calls and calls[0] > 0 and calls[0] % 32 == 0
+        assert "RepartitionByExpression [tok" in _plan(capped)
+        assert "RepartitionByExpression" not in _plan(plain)
+        # sizing is physical only: binding cap still subsets
         assert set(_rows(capped)) <= set(_rows(plain))
     finally:
-        heat.clear_cache()
+        stats.clear_cache()
         spark.catalog.clearCache()
 
 
-def test_autosize_for_shuffle_bytes_raises_and_floors(spark, monkeypatch):
-    from sec_edgar_spark.operators import partitions as P
-
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
-    old_state = getattr(spark, P._STATE_ATTR, None)
+def test_exchange_partitions_only_above_session(spark):
     old_conf = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        if hasattr(spark, P._STATE_ATTR):
-            delattr(spark, P._STATE_ATTR)
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # tiny estimate: stays at the session floor
-        assert P.autosize_for_shuffle_bytes(spark, "ds-a", 1024) == 8
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        # tiny estimate: the session's partitions already cover it
+        assert stats.exchange_partitions(spark, 1024) is None
         # 10 GiB of pairs at 128 MiB/task → 80 → pow2 128
-        eff = P.autosize_for_shuffle_bytes(spark, "ds-a", 10 << 30)
-        assert eff == 128
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "128"
-        # smaller later estimate never lowers the dataset's max demand
-        assert P.autosize_for_shuffle_bytes(spark, "ds-a", 1024) == 128
-        # a DIFFERENT dataset re-sizes down to its own demand
-        assert P.autosize_for_shuffle_bytes(spark, "ds-b", 1024) == 8
-        # no dataset identity → no-op
-        assert P.autosize_for_shuffle_bytes(spark, None, 10 << 30) is None
-        # env pin disables
-        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
-        assert P.autosize_for_shuffle_bytes(spark, "ds-a", 10 << 30) is None
+        assert stats.exchange_partitions(spark, 10 << 30) == 128
+        # a decision, not a side effect: session conf untouched
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_conf)
-        if old_state is not None:
-            setattr(spark, P._STATE_ATTR, old_state)
-        elif hasattr(spark, P._STATE_ATTR):
-            delattr(spark, P._STATE_ATTR)
+
+
+# ---------------------------------------------------- order independence
+
+
+def _executed(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # expression and plan ids differ between any two builds
+    return re.sub(r"#\d+L?| \[plan_id=\d+\]", "", plan)
+
+
+@pytest.mark.skipif(
+    not __import__("os").path.exists(SF), reason="testdata missing"
+)
+def test_plan_independent_of_earlier_heavy_query(spark, monkeypatch):
+    """A query's physical plan must not depend on what ran before it in
+    the session: a capped dedup whose pair estimate is huge sizes its
+    OWN candidate exchange and leaves session conf alone."""
+    from sec_edgar_spark import catalog
+    from sec_edgar_spark.operators import dedup as D
+    from sec_edgar_spark.queries import QUERIES
+
+    def query_b():
+        return catalog.table(spark, SF, "lineitem").groupBy("l_returnflag").count()
+
+    real = D.token_df_stats
+
+    def forced(*a, **kw):
+        # 2**31 pairs × 32 B = 64 GiB of estimated candidate shuffle
+        return real(*a, **kw)[:3] + (2**31, 2**31)
+
+    conf0 = spark.conf.get("spark.sql.shuffle.partitions")
+    plan0 = _executed(query_b())
+    monkeypatch.setattr(D, "token_df_stats", forced)
+    try:
+        capped = _executed(QUERIES["dedup_prefix_filter_capped"](spark, SF))
+    finally:
+        spark.catalog.clearCache()
+    assert "hashpartitioning(tok, 512)" in capped
+    assert spark.conf.get("spark.sql.shuffle.partitions") == conf0
+    assert _executed(query_b()) == plan0

@@ -1,4 +1,4 @@
-"""Heat-dispatched salt selection (operators/heat.py, VERDICT r11 #1).
+"""Heat-dispatched salt selection (operators/stats.py, VERDICT r11 #1).
 
 Three contracts:
 1. the probe's decision: plain (None) on uniform key distributions,
@@ -9,7 +9,7 @@ Three contracts:
    family, the plan the probe picks produces exactly the rows of the
    plan it rejects (the r11 salted-vs-single-window property tests
    cover the deep adversarial cases; this pins the dispatch seam);
-3. memoization: a cache_key probes once per process (bench/gate runs
+3. memoization: a table path probes once per process (bench/gate runs
    issue many queries over one dataset).
 """
 
@@ -20,7 +20,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from sec_edgar_spark.operators import heat
+from sec_edgar_spark.operators import stats
 from sec_edgar_spark.operators.relational import (
     salted_moving_agg,
     salted_next,
@@ -68,7 +68,7 @@ def _sorted_pdf(df):
 
 def test_probe_estimates_max_key_rows(events):
     # true hottest key (user 3) holds ~3/8 of 3000 rows
-    est = heat.estimated_max_key_rows(events, "user_id", sample_frac=0.5)
+    est = stats.estimated_max_key_rows(events, "user_id", sample_frac=0.5)
     true_max = (
         events.groupBy("user_id").count().agg(F.max("count")).first()[0]
     )
@@ -79,35 +79,35 @@ def test_pick_bucket_flips_on_threshold(events):
     # the same data reads as healthy or hot purely by threshold — the
     # dispatch is a measured decision, not a config constant
     assert (
-        heat.pick_bucket(events, "user_id", hot_rows=10**9,
-                         sample_frac=0.5) is None
+        stats.pick_bucket(events, "user_id", hot_rows=10**9,
+                          sample_frac=0.5) is None
     )
     assert (
-        heat.pick_bucket(events, "user_id", hot_rows=100, sample_frac=0.5)
+        stats.pick_bucket(events, "user_id", hot_rows=100, sample_frac=0.5)
         == 6 * 3600
     )
 
 
 def test_pick_bucket_empty_frame(spark):
     empty = spark.createDataFrame([], "user_id bigint, ts timestamp")
-    assert heat.pick_bucket(empty, "user_id", sample_frac=0.5) is None
+    assert stats.pick_bucket(empty, "user_id", sample_frac=0.5) is None
 
 
 def test_cache_probes_once(events, monkeypatch):
-    heat.clear_cache()
+    stats.clear_cache()
     calls = {"n": 0}
-    real = heat.estimated_max_key_rows
+    real = stats.estimated_max_key_rows
 
     def counting(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(heat, "estimated_max_key_rows", counting)
-    key = ("test-cache", "events", "user_id")
+    monkeypatch.setattr(stats, "estimated_max_key_rows", counting)
     for _ in range(3):
-        heat.pick_bucket(events, "user_id", sample_frac=0.5, cache_key=key)
+        stats.pick_bucket(events, "user_id", sample_frac=0.5,
+                          path="test-cache/events.parquet")
     assert calls["n"] == 1
-    heat.clear_cache()
+    stats.clear_cache()
 
 
 @pytest.mark.parametrize("bucket", [None, 6 * 3600])
@@ -180,14 +180,14 @@ def test_probe_picks_salted_on_skew_corpus(spark):
         pytest.skip("sf10-skew replica not present")
     from sec_edgar_spark.catalog import table
 
-    heat.clear_cache()
+    stats.clear_cache()
     e = table(spark, os.path.abspath(SKEW_DIR), "events")
     assert (
-        heat.pick_bucket(e, "user_id",
-                         cache_key=("skew-test", "events", "user_id"))
+        stats.pick_bucket(e, "user_id",
+                          path=os.path.join(SKEW_DIR, "events.parquet"))
         == 6 * 3600
     )
-    heat.clear_cache()
+    stats.clear_cache()
 
 
 @pytest.mark.slow
@@ -199,33 +199,33 @@ def test_probe_picks_plain_on_uniform_gate(spark):
     sf = "/root/testdata/sf0.01"
     if not os.path.exists(os.path.join(sf, "events.parquet")):
         pytest.skip("gate corpus not present")
-    heat.clear_cache()
+    stats.clear_cache()
     e = table(spark, sf, "events")
-    assert heat.pick_bucket(e, "user_id") is None
-    heat.clear_cache()
+    assert stats.pick_bucket(e, "user_id") is None
+    stats.clear_cache()
 
 
 def test_dataset_fingerprint_invalidates_on_rewrite(tmp_path):
-    """ADVICE r12: folding dataset_fingerprint into cache_key makes an
+    """ADVICE r12: folding dataset_fingerprint into the memo key makes an
     in-place rewrite re-probe instead of serving a stale estimate —
     for both single-file and directory datasets."""
     import time
 
     f = tmp_path / "t.parquet"
     f.write_bytes(b"x" * 10)
-    fp1 = heat.dataset_fingerprint(str(f))
+    fp1 = stats.dataset_fingerprint(str(f))
     assert fp1 == (1, f.stat().st_mtime_ns, 10)
     time.sleep(0.01)
     f.write_bytes(b"y" * 20)  # overwrite: size and mtime change
-    fp2 = heat.dataset_fingerprint(str(f))
+    fp2 = stats.dataset_fingerprint(str(f))
     assert fp2 != fp1
 
     d = tmp_path / "dir.parquet"
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"a" * 5)
-    fpd1 = heat.dataset_fingerprint(str(d))
+    fpd1 = stats.dataset_fingerprint(str(d))
     (d / "part-1.parquet").write_bytes(b"b" * 5)  # append: file count
-    fpd2 = heat.dataset_fingerprint(str(d))
+    fpd2 = stats.dataset_fingerprint(str(d))
     assert fpd1 != fpd2 and fpd2[0] == 2
 
-    assert heat.dataset_fingerprint(str(tmp_path / "missing")) is None
+    assert stats.dataset_fingerprint(str(tmp_path / "missing")) is None

@@ -112,7 +112,7 @@ HOT_KEY_WINDOW_NOTES: dict[str, str] = {
 }
 
 # Heat-dispatched queries (r12, VERDICT r11 #1): the sampled key-heat
-# probe (operators/heat.py) picked the PLAIN single-window plan at the
+# probe (operators/stats.py) picked the PLAIN single-window plan at the
 # audit's gate-scale data — no hot key there, so the salted plan's
 # extra Exchanges would be pure tax.  The salted plan is chosen
 # automatically when the probe measures a hot key (sf10-skew picks it;
@@ -120,7 +120,7 @@ HOT_KEY_WINDOW_NOTES: dict[str, str] = {
 # the two plans), so the unsalted window seen in THIS audit is a
 # measured decision, not an exposure.
 _HEAT_DISPATCH_NOTE = (
-    "heat-dispatched (operators/heat.py): probe picked the plain plan "
+    "heat-dispatched (operators/stats.py): probe picked the plain plan "
     "at gate scale (no hot key); a measured hot key flips to the "
     "bit-identical salted plan (tests/test_heat_dispatch.py)"
 )

@@ -113,19 +113,14 @@ def build_sf100(spark) -> None:
 
 
 def main() -> int:
-    from sec_edgar_spark.session import get_spark
     import sec_edgar_spark.queries as Q
     import bench
 
     probes = [a for a in sys.argv[1:] if not a.startswith("--")] or PROBES
 
-    # NO per-run shuffle conf (VERDICT r12 #1): partition sizing is now
-    # engine behavior — catalog.table feeds each dataset's input bytes
-    # through operators/partitions.py, so the sf10 legs run at the
-    # session floor (32) and the sf100 legs get data-scaled partitions
-    # (the sf100 documents table lands on the measured 128 pin)
-    # automatically.  SPARK_GRAFT_SHUFFLE, if exported, pins the old
-    # manual behavior and disables autosizing.
+    # No per-run shuffle conf: catalog.table applies the dataset's
+    # input-bytes rule and the capped queries size their own candidate
+    # exchange from the pair estimate (operators/stats.py).
     # UI on for job-group task metrics (r14, VERDICT #8: the decade
     # claim needs SPILL evidence, not just walls — the r13 partition
     # calibration was motivated by a 24 GB spill at 128 partitions).
@@ -137,6 +132,9 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if spark.sparkContext.uiWebUrl is None:
+        print("Spark UI is off — the task-time and spill metrics need it")
+        return 1
     spark.conf.set("spark.sec_edgar.longcents", "true")
 
     if not os.path.exists(os.path.join(SF10, "documents.parquet")):
@@ -198,6 +196,7 @@ def main() -> int:
     leg_metrics: dict[str, dict[str, dict]] = {
         n: {"sf10": {}, "sf100": {}} for n in probes
     }
+    fastest: dict[tuple[str, str], float] = {}
     for p in range(passes):
         for name in probes:
             fn = qs[name]
@@ -216,14 +215,17 @@ def main() -> int:
                 spark.sparkContext.setJobGroup("", "")
                 w = time.time() - t0
                 all_walls[name][label].append(round(w, 1))
-                stages = gm.stage_profile(gid, top=10_000) or []
-                spill = round(sum(s["spill_mb"] for s in stages), 1)
+                stages = gm.stage_profile(gid, top=10_000)
+                # None, not 0.0, when the REST metrics are unavailable
+                spill = (
+                    round(sum(s["spill_mb"] for s in stages), 1)
+                    if stages
+                    else None
+                )
                 # keep the metrics of the FASTEST pass per leg (matches
                 # the min-wall row the table reports)
-                if (
-                    not leg_metrics[name][label]
-                    or w < leg_metrics[name][label]["wall_s"]
-                ):
+                if w < fastest.get((name, label), float("inf")):
+                    fastest[name, label] = w
                     leg_metrics[name][label] = {
                         "wall_s": round(w, 1),
                         "task_time_s": gm.task_time_s(gid),
@@ -256,9 +258,9 @@ def main() -> int:
         f"vocabulary means per-key heat grows with the decade — the "
         f"adversarial direction for the caps.  "
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}], "
-        f"shuffle partitions AUTOSIZED by the engine from input bytes "
-        f"(operators/partitions.py — no per-run conf; sf10 legs at the "
-        f"32-partition session floor, sf100 legs data-scaled), "
+        f"shuffle partitions from the engine (operators/stats.py: the "
+        f"dataset's input-bytes rule, candidate exchanges sized by "
+        f"their pair estimate — no per-run conf), "
         f"wall = MIN of {passes} passes per (query, dir) after a "
         f"PER-DIR untimed first-probe warmup (the one-time exact "
         f"token-df probe and page-cache fill are excluded from BOTH "
@@ -267,24 +269,6 @@ def main() -> int:
         f"first-run walls recorded in the JSON), noop sink.  "
         f"git {sha}, "
         f"loadavg {os.getloadavg()[0]:.1f}.",
-        "",
-        "THE WALL THE THIRD DECADE FOUND (and its name): at the "
-        "gate-scale default of 32 shuffle partitions, "
-        "dedup_containment_capped measured 14.4×/decade (40.8s → "
-        "588.4s) — per-task shuffle input grows 10× at a fixed "
-        "partition count and crosses from in-memory sort into "
-        "spill-merge superlinearity.  With partitions scaled to the "
-        "data (128 initial; AQE still coalesces small stages) the "
-        "same query measures ~7×/decade.  The cap's CANDIDATE volume "
-        "is linear by construction (≤ LEN_CAP postings per token per "
-        "side, vocabulary grows with the corpus); the superlinear "
-        "term was purely physical partition sizing.  AS OF r13 the "
-        "fix is ENGINE BEHAVIOR, not bench conf: "
-        "operators/partitions.py sizes shuffle partitions from the "
-        "scanned tables' input bytes at plan-build time (floor = the "
-        "session's own setting, so the many-small-query gate scale "
-        "keeps its measured-cheaper 32), and this run uses it with "
-        "no manual conf.",
         "",
         "| query | sf10 | sf100 | ×/decade | sf100 spill | note |",
         "|---|---|---|---|---|---|",

@@ -24,7 +24,7 @@ Corpus recipes (same per-decade construction as every prior decade):
   (the graph families' edge sources; p_* vocabularies irrelevant
   here).
 
-Shuffle sizing is the ENGINE's (operators/partitions.py, r13 #1): no
+Shuffle sizing is the ENGINE's (operators/stats.py, r13 #1): no
 per-run conf — each leg runs at whatever the input-bytes rule picks,
 which is itself part of what the decade factor measures.
 
@@ -273,7 +273,7 @@ def main() -> int:
         f"event family (uniform AND Zipf-skew replicas — the hot user "
         f"grows 3M → ~30M rows across the decade) and the iterative "
         f"graph family.  Shuffle partitions are the ENGINE's "
-        f"input-bytes rule (operators/partitions.py), no per-run conf "
+        f"input-bytes rule (operators/stats.py), no per-run conf "
         f"— the printed per-leg partition counts are part of the "
         f"measurement.  local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}],"
         f" single timed run per (query, dir) after per-family untimed "

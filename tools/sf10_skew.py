@@ -69,7 +69,7 @@ PROBES = [
 ]
 
 # r12: the event-window consumers are HEAT-DISPATCHED
-# (operators/heat.py) — on the uniform sf10 replica the probe picks the
+# (operators/stats.py) — on the uniform sf10 replica the probe picks the
 # plain single-window plan, on the skew replica (3M-row hot user) it
 # picks the salted plan; the factor column therefore prices
 # "plain-on-healthy vs salted-on-hot", exactly the production contract.

@@ -5,10 +5,10 @@ Wall time on a local[32] box conflates executor compute with stage
 scheduling latency, page-cache state, and ambient load; executor
 task-time (Σ executorRunTime over exactly the stages of one job
 group's jobs) moves only when the PLAN or the COMPUTE changed.
-bench.py grows this inline for the gate battery (job-group
-attribution, ADVICE r12); the scale tools need the same measurement
-per LEG plus a per-stage profile so a superlinear decade factor can
-be attributed to the specific stage that grew.
+bench.py reads it per gate-battery sample (job-group attribution,
+ADVICE r12); the scale tools read it per LEG plus a per-stage profile
+so a superlinear decade factor can be attributed to the specific
+stage that grew.
 
 Best-effort by design: any REST failure returns None/[] — the wall
 is never blocked on metrics.

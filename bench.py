@@ -205,120 +205,6 @@ HEADLINE = [
     "events_time_to_convert",
 ]
 
-# Queries whose documents/embeddings scan feeds a per-row CPU-heavy map
-# stage (shingling, hashing, vector math, trained models).  Only these
-# get the scan-spread repartition (catalog.py scan_parallelize): the
-# driver's testdata is one row group per table, so without it the whole
-# map stage runs on one core.  Cheap aggregate-only readers of the same
-# tables are deliberately NOT listed — for them the extra shuffle costs
-# more than the single-task scan (measured r5: dedup_exact 0.18s->0.62s
-# under a blanket per-table flag; VERDICT r5 "what's wrong" #1).
-SCAN_PARALLELIZE = {
-    "text_quality_filter",
-    "text_fingerprint",
-    "dedup_minhash_lsh_pairs",
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "dedup_ngram_jaccard_pairs",
-    "ann_ivf_topk",
-    "text_repetition_filter",
-    "curation_domain_mix",
-    "emb_quantize_int8",
-    "ml_kmeans_assign",
-    "ann_ivf_trained",
-    "dedup_chunk_overlap",
-    "curation_keep_best",
-    "dedup_semantic",
-    "dedup_semantic_capped",
-    "dedup_semantic_cap_audit",
-    "ann_pq_adc_topk",
-    "text_bm25_search",
-    "text_bigram_pmi",
-    "text_vocab_growth",
-    "text_ngram_novelty",
-    "ml_cluster_quality",
-    "text_phrase_merge",
-    # round 6: all per-row CPU-heavy over documents
-    "dedup_incremental_lsh",
-    "dedup_span_removal",
-    "dedup_simhash_hamming",
-    "text_sparse_cosine_pairs",
-    "text_winnowing_pairs",
-    "curation_dsir_select",
-    # round 7: per-row CPU-heavy over documents
-    "dedup_simhash_adaptive",
-    "dedup_prefix_filter_capped",
-    "dedup_containment_capped",
-    "curation_export_shards",
-    # round 8: per-row WAV synthesis fold + numpy PCM decode
-    "multimodal_audio_energy",
-    # round 9: per-row BMP synthesis fold + numpy pixel decode; the
-    # hybrid arms include BM25's token explode over documents
-    "multimodal_image_tile_luminance",
-    "retrieval_hybrid_rrf",
-    "retrieval_hybrid_weighted",
-    # round-9 session 2: token explodes / LSH shingling over documents
-    "audit_source_overlap_kmv",
-    "graph_link_prediction_jaccard",
-    "curation_oov_rate",
-    "dedup_rate_by_source",
-    "text_vocab_drift",
-    "text_kwic",
-    "curation_epoch_mix_schedule",
-    "emb_dim_variance_audit",
-    "curation_funnel_report",  # composes quality explode + LSH keep-best
-    "curation_card_by_source",
-    "graph_components_modularity",
-    "multimodal_image_dedup_tiles",
-    "dedup_band_tuning",
-    "dedup_residual_audit",
-    # round 10: token explode over documents
-    "text_zipf_fit",
-    "events_sessionize_salted",
-}
-
-# r13: the flag is per-query TABLES, not just membership — the fact
-# tables (orders/lineitem) have the same one-row-group layout as
-# documents, so their per-row-CPU-heavy readers (8 md5s/row bootstrap
-# fan-out, 4-hash count-min build, the 7-way distinct-agg Expand,
-# per-doc trigram explode) also ran their whole map stage on one core.
-# Queries in the legacy set keep the historical documents/embeddings
-# value; the entries below override with the table whose scan feeds
-# the heavy map.  Cheap aggregate-only readers of the fact tables stay
-# unflagged for the measured r5 reason above.
-SCAN_PARALLELIZE = {q: "documents,embeddings" for q in SCAN_PARALLELIZE}
-SCAN_PARALLELIZE.update(
-    {
-        "agg_bootstrap_ci": "orders",
-        "agg_selfjoin_size_estimate": "lineitem",
-        "profile_lineitem": "lineitem",
-        "text_trigram_search": "documents",
-    }
-)
-
-# r14 (guide §4.2, VERDICT r13 #3): trainer queries evaluate the
-# integer argmin over broadcast codebooks; as a Catalyst higher-order
-# expression that evaluation is INTERPRETED and was the dominant task
-# cost of every trainer (~35 s task in ann_pq_adc_topk).  Under this
-# per-query flag the same argmin runs as one vectorized NumPy
-# ArrowEvalPython stage (operators/kmeans.VECTORIZED_ARGMIN_CONF) —
-# bit-identical results (exact int64 arithmetic both ways, ties to the
-# lowest cell id, parity oracle-checked at sf0.01/sf0.1).  The
-# correctness gate never sets the flag, so oracle-gated plans keep the
-# pure-expression path — same declared-flag discipline as
-# SCAN_PARALLELIZE above; a production deployment turns the conf on
-# globally.
-VECTORIZED_ARGMIN = {
-    "ml_kmeans_assign",
-    "ml_cluster_quality",
-    "ann_ivf_trained",
-    "ann_pq_adc_topk",
-    "dedup_semantic",
-    "dedup_semantic_capped",
-    "dedup_semantic_cap_audit",
-    "curation_cluster_balanced_sample",
-}
-
 # Iterative-trainer queries (multi-job loops: k-means iterations, PQ
 # codebook fits, centroid assignment).  Their first run routinely eats
 # a codegen/JIT warmup spike that best-of-2 can't always dodge — r6's
@@ -373,15 +259,6 @@ def main() -> int:
     # verified identical at sf0.1 by tests/test_oracle_gate.py), ~35%
     # faster q1 hash-agg.
     spark.conf.set("spark.sec_edgar.longcents", "true")
-    # The testdata is one row group per table -> single-task scans; a
-    # real layout is many-files/row-groups.  Spread the scans whose
-    # downstream is per-row CPU-heavy (shingling, hashing, vector
-    # math) so those map stages use the whole box.  The flag is
-    # toggled PER QUERY in the timing loop below (SCAN_PARALLELIZE):
-    # a per-table blanket flag also repartitioned cheap aggregate-only
-    # readers of documents/embeddings, costing them more in shuffle
-    # than the spread saved (measured best-of-3 matrix in SCALE.md;
-    # rationale in catalog.py).
     qs = Q.queries()
 
     # Warm the JVM (codegen/JIT), parquet footers and the reader path
@@ -453,17 +330,6 @@ def main() -> int:
     errors: dict[str, str] = {}
     for name in headline:
         fn = qs[name]
-        # Per-query scan-spread (see SCAN_PARALLELIZE above); the
-        # catalog memo keys on the flag state, so both variants of a
-        # table coexist without re-reading footers.
-        spark.conf.set(
-            "spark.sec_edgar.scan_parallelize",
-            SCAN_PARALLELIZE.get(name, ""),
-        )
-        spark.conf.set(
-            "spark.sec_edgar.vectorized_argmin",
-            "true" if name in VECTORIZED_ARGMIN else "false",
-        )
         # Best-of-2 per query (same policy as tools/scale_probe.py):
         # single-shot wall times on a shared box swing up to 5x on
         # whichever query catches a GC pause or a contending process —

@@ -35,7 +35,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _MEMO_ATTR = "_sec_edgar_spark_catalog_memo"
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
+) -> DataFrame:
+    """The table as a DataFrame.  ``spread=True`` is for queries whose
+    scan feeds per-row CPU-heavy map work (shingling, hashing, vector
+    math, blob decode): the scan is round-robined over
+    ``stats.spread_parts`` tasks when fewer scan tasks than that read
+    data (at most one per row group, and a file smaller than one byte
+    split is one task however many row groups it has), so the map
+    stage uses the whole executor.  A layout whose scan already runs
+    that many tasks is left alone.  Filters still push into the
+    scan (Catalyst moves deterministic predicates through
+    Repartition).  Cheap aggregate-only readers do not spread: for
+    them the extra shuffle costs more than the single-task scan
+    (SCALE.md, "Single-row-group scans")."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # Every call, memo hits included: the conf must follow the dataset
@@ -45,8 +59,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if memo is None:
         memo = {}
         setattr(spark, _MEMO_ATTR, memo)
-    par = _parallelize_tables(spark)
-    key = (sf_dir, name, name in par)
+    key = (sf_dir, name, spread)
     if key not in memo:
         path = f"{sf_dir}/{name}.parquet"
         if name == "events":
@@ -65,31 +78,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         else:
             df = spark.read.parquet(path)
-        if name in par:
-            # The driver's testdata is ONE row group per table, so every
-            # scan is a single task and CPU-heavy map stages (shingle
-            # assembly, hashing, vector math) run on one core until the
-            # first shuffle.  A real lakehouse layout has many row
-            # groups/files and never hits this; under the flag (set by
-            # bench.py for the per-row-CPU-heavy tables, never by the
-            # correctness gate) a cheap early round-robin spreads the
-            # scan across the executor before the expensive per-row
-            # work.  Filters still push into the scan — Catalyst moves
-            # deterministic predicates through Repartition.  Cheap
-            # aggregate-only queries are NOT flagged: for them the
-            # extra shuffle costs more than the single-task scan.
-            #
-            # r14 (VERDICT r13 #1): the spread count is bounded by the
-            # TABLE'S OWN ROW COUNT (parquet footer metadata — no job),
-            # not raw defaultParallelism: per-task work here is
-            # per-row CPU, so a 2 000-row table fanned 32 ways makes
-            # 32 tasks of ~60 rows whose scheduling overhead exceeds
-            # the work — the r13 driver measured the battery's 32-core
-            # leg losing to its own 8-core leg on exactly these
-            # shapes.  ≥256 rows per spread task keeps small tables on
-            # few tasks at any core count while big tables still use
-            # the whole executor (50 k rows → the full parallelism).
-            df = df.repartition(stats.spread_parts(spark, path))
+        # The scan's partition count comes from planning (file
+        # listing and byte splits); no job runs.
+        n = None
+        if spread:
+            n = stats.spread_parts(spark, path, df.rdd.getNumPartitions())
+        if n:
+            df = df.repartition(n)
         memo[key] = df
     return memo[key]
 
@@ -106,17 +101,6 @@ def _size_shuffle(spark: SparkSession, sf_dir: str) -> None:
     eff = max(build, stats.input_partitions(sf_dir, TABLES))
     if int(spark.conf.get("spark.sql.shuffle.partitions")) != eff:
         spark.conf.set("spark.sql.shuffle.partitions", str(eff))
-
-
-def _parallelize_tables(spark: SparkSession) -> frozenset[str]:
-    """Tables to round-robin after the scan: comma-separated names, or
-    'true'/'all' for every table, in spark.sec_edgar.scan_parallelize."""
-    raw = spark.conf.get("spark.sec_edgar.scan_parallelize", "")
-    if raw in ("", "false"):
-        return frozenset()
-    if raw in ("true", "all"):
-        return frozenset(TABLES)
-    return frozenset(t.strip() for t in raw.split(",") if t.strip())
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -23,124 +23,21 @@ to the assignment join (the corpus never shuffles for assignment); the
 update is a posexplode → (cell, pos) partial-aggregated groupBy — the
 identical shape as operators/similarity.mean_pool.  Bounds: |x| < 2^10
 keeps q in 2^30; squared diffs * dims stay < 2^63 up to ~8k dims.
+
+The argmin stays a Catalyst expression.  A NumPy ArrowEvalPython
+argmin over the driver-collected codebook runs the assignment stage
+faster, but it needs one Spark job per Lloyd pass to collect that
+codebook, and at sf0.1 on local[4] it lost end to end on three of the
+four trainer queries (CHANGES.md).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 QSCALE = 1 << 20
-
-# r14 (guide §4.2, VERDICT r13 #3): the per-row argmin over the
-# broadcast centroid array is exact integer math, but evaluating it as
-# a Catalyst higher-order function is INTERPRETED — k=256 codebook
-# cells × 16-dim folds per row was the measured dominant task cost of
-# every trainer query (~35 s task in ann_pq_adc_topk at sf0.1).  Under
-# this conf the argmin runs as ONE ArrowEvalPython stage doing the
-# same int64 arithmetic vectorized in NumPy (int64 ops in NumPy and
-# JVM longs share two's-complement semantics, so results are
-# bit-identical even in overflow corners; ties resolve to the lowest
-# cell id in both paths).  Default OFF: the oracle-gated plans keep
-# the pure-expression path (no Python nodes, pins unchanged); the
-# bench opts in per trainer query, and a production deployment would
-# turn it on globally.  Trade: with the flag on the Lloyd loop
-# collects the k-row centroid frame per iteration (k ≤ 256 rows —
-# broadcast-sized driver traffic, not data) so the kernel can close
-# over the codebook, the same way the multimodal codec kernels close
-# over their decoder.
-VECTORIZED_ARGMIN_CONF = "spark.sec_edgar.vectorized_argmin"
-
-
-def _vectorized(spark) -> bool:
-    try:
-        return spark.conf.get(VECTORIZED_ARGMIN_CONF, "false") == "true"
-    except Exception:
-        return False
-
-
-def _collect_cents(cents: DataFrame, grouped: bool = False):
-    """Collect a centroid frame to (cells, C) NumPy pairs, sorted by
-    ascending cell id (ties in the kernel then resolve to the lowest
-    cell id, matching the expression path's lexicographic struct min).
-    Grouped form returns {g: (cells, C)}.  k-row traffic only."""
-    import numpy as np
-
-    if grouped:
-        rows = cents.select("g", "cell", "cv").collect()
-        out: dict = {}
-        for g in {r["g"] for r in rows}:
-            grp = sorted(
-                ((r["cell"], r["cv"]) for r in rows if r["g"] == g)
-            )
-            out[g] = (
-                np.array([c for c, _ in grp], dtype=np.int64),
-                np.array([v for _, v in grp], dtype=np.int64),
-            )
-        return out
-    rows = sorted(
-        ((r["cell"], r["cv"]) for r in cents.select("cell", "cv").collect())
-    )
-    return (
-        np.array([c for c, _ in rows], dtype=np.int64),
-        np.array([v for _, v in rows], dtype=np.int64),
-    )
-
-
-def _np_argmin(X, cells, C):
-    """Vectorized exact-int64 nearest-cell: first (lowest cell id)
-    strict minimum of Σ(x-c)² — the NumPy twin of the expression
-    path's array_min(struct(d², cell))."""
-    import numpy as np
-
-    bestd = np.full(X.shape[0], np.iinfo(np.int64).max, dtype=np.int64)
-    bestc = np.zeros(X.shape[0], dtype=np.int64)
-    for j in range(C.shape[0]):
-        diff = X - C[j]
-        d = np.einsum("ij,ij->i", diff, diff)
-        m = d < bestd
-        bestd[m] = d[m]
-        bestc[m] = cells[j]
-    return bestc
-
-
-def _argmin_kernel(cells, C):
-    """pandas_udf ``qv -> cell`` closing over one codebook."""
-
-    @F.pandas_udf("bigint")
-    def cell_of(qv: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        X = np.stack(qv.to_numpy())
-        return pd.Series(_np_argmin(X, cells, C))
-
-    return cell_of
-
-
-def _argmin_kernel_grouped(books: dict):
-    """pandas_udf ``(g, qv) -> cell`` closing over per-group codebooks."""
-
-    @F.pandas_udf("bigint")
-    def cell_of(g: pd.Series, qv: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        X = np.stack(qv.to_numpy())
-        gv = g.to_numpy()
-        out = np.zeros(len(X), dtype=np.int64)
-        for gk in pd.unique(g):
-            cells, C = books[gk]
-            m = gv == gk
-            out[m] = _np_argmin(X[m], cells, C)
-        return pd.Series(out)
-
-    return cell_of
-
 
 def quantize_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, qv: array<long>) fixed-point vectors."""
@@ -187,6 +84,25 @@ def _argmin_cell(cents: DataFrame):
     return carr, m["cell"]
 
 
+def _argmin_cell_grouped(cents: DataFrame):
+    """Grouped twin of ``_argmin_cell`` over ``(g, cell, cv)``: one
+    array<struct(cell, cv)> row per g.  Returns (carr_g, expr): join
+    ``F.broadcast(carr_g)`` on ``g`` and select ``expr.alias("cell")``."""
+    carr_g = cents.groupBy("g").agg(
+        F.collect_list(F.struct("cell", "cv")).alias("_cs")
+    )
+    m = F.array_min(
+        F.transform(
+            "_cs",
+            lambda c: F.struct(
+                _sqdist(F.col("qv"), c["cv"]).alias("d"),
+                c["cell"].alias("cell"),
+            ),
+        )
+    )
+    return carr_g, m["cell"]
+
+
 def lloyd_fit(q: DataFrame, k: int, n_iter: int) -> DataFrame:
     """Run ``n_iter`` integer Lloyd iterations over a quantized
     ``(id, qv)`` frame; returns the trained centroids ``(cell, cv)``
@@ -199,26 +115,16 @@ def lloyd_fit(q: DataFrame, k: int, n_iter: int) -> DataFrame:
         ).cast("bigint").alias("cell"),
         F.col("qv").alias("cv"),
     )
-    vec = _vectorized(q.sparkSession)
     for _ in range(n_iter):
         # Assignment is the map-only argmin over the broadcast
         # centroid array (_argmin_cell, r13) — zero shuffle per pass;
         # the previous crossJoin + groupBy(id) hash agg paid a k× row
         # fan-out and an exchange of every qv array per iteration.
-        # Under VECTORIZED_ARGMIN_CONF the same argmin runs as one
-        # ArrowEvalPython NumPy stage (bit-identical — see the conf
-        # note above).
-        if vec:
-            cells, C = _collect_cents(cents)
-            assigned = q.select(
-                "id", "qv", _argmin_kernel(cells, C)("qv").alias("cell")
-            )
-        else:
-            carr, cell_expr = _argmin_cell(cents)
-            assigned = (
-                q.crossJoin(broadcast(carr))
-                .select("id", "qv", cell_expr.alias("cell"))
-            )
+        carr, cell_expr = _argmin_cell(cents)
+        assigned = (
+            q.crossJoin(broadcast(carr))
+            .select("id", "qv", cell_expr.alias("cell"))
+        )
         per_pos = assigned.select(
             "cell", F.posexplode("qv").alias("pos", "x")
         ).groupBy("cell", "pos").agg(
@@ -244,11 +150,7 @@ def assign_cells(q: DataFrame, cents: DataFrame) -> DataFrame:
     ties to the lowest cell id, as the map-only broadcast-array
     argmin (``_argmin_cell``; identical results to the former
     min(struct(d², cell)) hash agg, with the k× fan-out and the
-    groupBy(id) exchange removed).  Vectorized NumPy kernel under
-    VECTORIZED_ARGMIN_CONF (bit-identical, see conf note)."""
-    if _vectorized(q.sparkSession):
-        cells, C = _collect_cents(cents)
-        return q.select("id", _argmin_kernel(cells, C)("qv").alias("cell"))
+    groupBy(id) exchange removed)."""
     carr, cell_expr = _argmin_cell(cents)
     return (
         q.crossJoin(broadcast(carr))
@@ -302,39 +204,16 @@ def lloyd_fit_grouped(qg: DataFrame, k: int, n_iter: int) -> DataFrame:
     cents = qg.join(broadcast(seed_ids), "id").select(
         "g", "cell", F.col("qv").alias("cv")
     )
-    vec = _vectorized(qg.sparkSession)
     for _ in range(n_iter):
         # Map-only grouped argmin (r13, same move as _argmin_cell):
         # per-group centroids collapse to one array row per g, the
         # equi-join on g broadcasts M rows, and the argmin runs as an
         # expression — no k× fan-out, no (g, id) exchange per pass.
-        # Vectorized NumPy kernel under VECTORIZED_ARGMIN_CONF
-        # (bit-identical, see conf note).
-        if vec:
-            books = _collect_cents(cents, grouped=True)
-            assigned = qg.select(
-                "g",
-                "id",
-                "qv",
-                _argmin_kernel_grouped(books)("g", "qv").alias("cell"),
-            )
-        else:
-            carr_g = cents.groupBy("g").agg(
-                F.collect_list(F.struct("cell", "cv")).alias("_cs")
-            )
-            cell_expr = F.array_min(
-                F.transform(
-                    "_cs",
-                    lambda c: F.struct(
-                        _sqdist(F.col("qv"), c["cv"]).alias("d"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-            )["cell"]
-            assigned = (
-                qg.join(broadcast(carr_g), "g")
-                .select("g", "id", "qv", cell_expr.alias("cell"))
-            )
+        carr_g, cell_expr = _argmin_cell_grouped(cents)
+        assigned = (
+            qg.join(broadcast(carr_g), "g")
+            .select("g", "id", "qv", cell_expr.alias("cell"))
+        )
         per_pos = assigned.select(
             "g", "cell", F.posexplode("qv").alias("pos", "x")
         ).groupBy("g", "cell", "pos").agg(
@@ -358,25 +237,8 @@ def lloyd_fit_grouped(qg: DataFrame, k: int, n_iter: int) -> DataFrame:
 def assign_cells_grouped(qg: DataFrame, cents: DataFrame) -> DataFrame:
     """Per-group nearest-centroid assignment ``(g, id, cell)`` —
     grouped twin of ``assign_cells`` (map-only broadcast-array argmin,
-    identical results to the former min-struct hash agg; vectorized
-    NumPy kernel under VECTORIZED_ARGMIN_CONF)."""
-    if _vectorized(qg.sparkSession):
-        books = _collect_cents(cents, grouped=True)
-        return qg.select(
-            "g", "id", _argmin_kernel_grouped(books)("g", "qv").alias("cell")
-        )
-    carr_g = cents.groupBy("g").agg(
-        F.collect_list(F.struct("cell", "cv")).alias("_cs")
-    )
-    cell_expr = F.array_min(
-        F.transform(
-            "_cs",
-            lambda c: F.struct(
-                _sqdist(F.col("qv"), c["cv"]).alias("d"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )["cell"]
+    identical results to the former min-struct hash agg)."""
+    carr_g, cell_expr = _argmin_cell_grouped(cents)
     return (
         qg.join(broadcast(carr_g), "g")
         .select("g", "id", cell_expr.alias("cell"))

@@ -30,7 +30,8 @@ time reads its inputs here, from one process-lifetime memo:
 - **explicit repartitions** (``range_parts``) and **scan spread**
   (``spread_parts``): sized from Catalyst's byte estimate and the
   parquet footer row count, clamped to ``defaultParallelism``, so
-  tiny frames stop fanning out to core-count tasks.
+  tiny frames stop fanning out to core-count tasks; a scan that
+  already has that many tasks reading row groups is not spread.
 
 Memo keys are built here, never by callers: ``(path,
 dataset_fingerprint(path), statistic)``.  Callers pass the table path
@@ -290,16 +291,26 @@ def range_parts(
     return max(1, min(par, need))
 
 
-def spread_parts(spark: SparkSession, path: str) -> int:
-    """Scan-spread partition count: ceil(rows / SPREAD_ROWS_PER_TASK)
-    clamped to [1, defaultParallelism].  Row count comes from the
-    parquet footer (a metadata read, no Spark job); unreadable footers
-    fall back to defaultParallelism."""
+def spread_parts(spark: SparkSession, path: str, scan_tasks: int) -> int | None:
+    """Scan-spread partition count ceil(rows / SPREAD_ROWS_PER_TASK)
+    clamped to [1, defaultParallelism], or None when the scan already
+    has that many tasks reading data: min(row groups, ``scan_tasks``),
+    where ``scan_tasks`` is the scan's planned partition count.  Spark
+    splits files by bytes, not row groups (maxSplitBytes = min(
+    maxPartitionBytes, max(openCostInBytes, bytes / parallelism))) and
+    a split reads the row groups whose midpoint it holds, so a file
+    smaller than one split is one task whatever its row groups.  Rows
+    and row groups come from the footers (a metadata read, no Spark
+    job); unreadable footers fall back to defaultParallelism."""
     par = spark.sparkContext.defaultParallelism
+    n, groups = par, scan_tasks
     try:
-        import pyarrow.parquet as _pq
+        import pyarrow.dataset as _ds
 
-        rows = _pq.ParquetFile(path).metadata.num_rows
+        frags = list(_ds.dataset(path, format="parquet").get_fragments())
+        rows = sum(f.metadata.num_rows for f in frags)
+        groups = sum(f.metadata.num_row_groups for f in frags)
+        n = max(1, min(par, -(-rows // SPREAD_ROWS_PER_TASK)))
     except Exception:
-        return par
-    return max(1, min(par, -(-rows // SPREAD_ROWS_PER_TASK)))
+        pass
+    return n if n > min(groups, scan_tasks) else None

@@ -272,7 +272,7 @@ def curation_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     targets = spark.createDataFrame(
         [("en", 0.4), ("de", 0.15), ("es", 0.15), ("fr", 0.15), ("zh", 0.15)],
         "lang string, w double",
@@ -584,7 +584,7 @@ def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     double divisions); per-doc sums fold in sorted bucket order for
     engine-exact doubles.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", "lang", T.tokens("text").alias("ts")).filter(
         F.size("ts") >= 2
     )
@@ -780,7 +780,7 @@ def curation_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_token_shards,
     )
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     n_tokens = T.token_count("text")
     alpha_ratio = T.alpha_chars("text").cast("double") / F.greatest(
         F.length("text"), F.lit(1)
@@ -1546,7 +1546,7 @@ def audit_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact side (token self-join) exists only to produce the
     gate's ground truth, same policy as agg_kmv_resemblance.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     from pyspark.sql import Window
 
     tok = d.select(
@@ -1661,7 +1661,7 @@ def curation_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the vocab is a fixed artifact and the probe is the same
     broadcast hash join.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     tok = d.select("doc_id", F.explode(T.tokens("text")).alias("token"))
     cnt = tok.groupBy("token").agg(F.count("*").alias("c"))
     vocab = (
@@ -1734,7 +1734,7 @@ def curation_epoch_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, and the remainder rank over the |sources|-row frame
     (constant-size at any corpus scale).
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     from pyspark.sql import Window
 
     dom = (
@@ -1837,7 +1837,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "passes_quality",
     )
     kb = QUERIES["curation_keep_best"](spark, sf_dir).select("doc_id", "keep")
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     s1 = q.filter("passes_quality").select("doc_id", "n_tokens")
     canon = (
         d.join(s1.select("doc_id"), "doc_id")
@@ -1881,7 +1881,7 @@ def curation_card_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     every grouping key — still map-combined, still one shuffle of
     digest-sized rows.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = T.token_count("text").cast("long")
     return (
         d.select(

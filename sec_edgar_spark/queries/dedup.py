@@ -145,7 +145,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return (
         D.minhash_lsh_dedup(
             d, "doc_id", "text",
@@ -210,7 +210,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return D.incremental_lsh_dedup(
         d.filter(F.col("doc_id") % 4 == 0),
         d.filter(F.col("doc_id") % 4 != 0),
@@ -382,7 +382,7 @@ def dedup_simhash_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     there, restoring constant occupancy."""
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return D.simhash_adaptive_pairs(
         d, "doc_id", "text", bits=48, max_hamming=6
     )
@@ -400,7 +400,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return D.simhash_hamming_pairs(
         d, "doc_id", "text", bits=48, bands=4, max_hamming=6
     )
@@ -524,7 +524,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (posting caps bound the blowup, forfeit observable)."""
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return D.ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.2, max_doc_freq=50,
         eager=True,
@@ -616,7 +616,7 @@ def dedup_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import text as T
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", T.tokens("text").alias("_toks")).filter(
         F.size("_toks") > 0
     )
@@ -727,7 +727,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FLAGGED rows (interval-island cumsum — rows per doc bounded by
     windows per doc, and only hot-window docs survive the semi-join).
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", T.tokens("text").alias("ts")).filter(
         F.size("ts") >= _SPAN_W
     )
@@ -835,7 +835,7 @@ def curation_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
     from ..operators.reporting import keep_best_selection
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     pairs = D.minhash_lsh_dedup(
         d, "doc_id", "text",
         num_hashes=NUM_MINHASHES, bands=BANDS, rows_per_band=ROWS_PER_BAND,
@@ -1118,7 +1118,7 @@ def dedup_prefix_filter_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return D.prefix_filter_join(
         d, "doc_id", "text", threshold=_PF_T,
         posting_df_cap_pct=_DF_CAP_PCT,
@@ -1232,15 +1232,20 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting truncation composes on top, bounding per-token candidate
     volume at any scale.
     """
-    return _containment_pairs(spark, sf_dir, df_cap_pct=_DF_CAP_PCT)
+    return _containment_pairs(
+        spark, sf_dir, df_cap_pct=_DF_CAP_PCT, spread=True
+    )
 
 
 def _containment_pairs(
-    spark: SparkSession, sf_dir: str, df_cap_pct: int | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    df_cap_pct: int | None = None,
+    spread: bool = False,
 ) -> DataFrame:
     # r13: (doc, tok) distinct is per-document — array_distinct before
     # the explode (no corpus-sized distinct Exchange).
-    toks = table(spark, sf_dir, "documents").select(
+    toks = table(spark, sf_dir, "documents", spread).select(
         "doc_id", F.explode(F.array_distinct(T.tokens("text"))).alias("tok")
     )
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
@@ -1676,7 +1681,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH candidate generation materializes once (measured 1.8s cached
     # vs 2.5s not, back-to-back at sf0.1).
     pairs = QUERIES["dedup_minhash_lsh_pairs"](spark, sf_dir).cache()
-    d = table(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents", spread=True).select(
         "source", "doc_id", T.token_count("text").cast("long").alias("n_toks")
     )
     from ..operators.reporting import rate_by_source
@@ -1841,7 +1846,7 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup as D
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     per_doc = D.fused_doc_frame(d, "doc_id", "text", NUM_MINHASHES, 3)
     sigs = per_doc
     shs = per_doc.select("doc_id", "sh")
@@ -1972,7 +1977,7 @@ def dedup_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("id").alias("doc_id"), "component"
     )
-    scored = table(spark, sf_dir, "documents").select(
+    scored = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", T.token_count("text").cast("int").alias("n_tokens")
     )
     kept = (

@@ -306,7 +306,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.multimodal import audio_frame_energy
 
-    d = table(spark, sf_dir, "documents").select("doc_id")
+    d = table(spark, sf_dir, "documents", spread=True).select("doc_id")
     n_samples = F.col("doc_id") % 1000 + 1
     channels = F.lit(1)
     rate = F.lit(16000)
@@ -463,7 +463,7 @@ def multimodal_image_tile_luminance(spark: SparkSession, sf_dir: str) -> DataFra
     """
     from ..operators.multimodal import image_tile_luminance
 
-    d = table(spark, sf_dir, "documents").select("doc_id")
+    d = table(spark, sf_dir, "documents", spread=True).select("doc_id")
     w = F.col("doc_id") % 25 + 8
     h = F.col("doc_id") % 17 + 8
     base = lambda x, y: (F.col("doc_id") * 31 + y * 17 + x * 7)  # noqa: E731
@@ -531,7 +531,7 @@ def multimodal_image_dedup_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.multimodal import image_tile_vector
 
-    d = table(spark, sf_dir, "documents").select("doc_id")
+    d = table(spark, sf_dir, "documents", spread=True).select("doc_id")
     base = F.col("doc_id") % 50
     w = base % 25 + 8
     h = base % 17 + 8

@@ -66,13 +66,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase in integer cents (long partial sums, one scale-down at
     the end) instead of decimal sums — the hash-agg update loop is
     64-bit integer adds instead of 128-bit decimal adds.  Doubles out
-    are bit-identical to the decimal path while each group's
-    micro-unit sum stays under 2^53 (~4e7 lineitem rows per group at
-    TPC-H value ranges; sum_charge accumulates ~1.1e11 1e-6-dollar
-    units per row): below that every conversion is exact-then-rounded
-    once; above it the long→double hop can double-round the last ulp
-    (and overflows 2^63 at ~8e7 rows/group).  Keep the decimal path
-    when groups exceed that, or split the sum into hi/lo columns.
+    are bit-identical to the decimal path up to the 2^63 overflow
+    guard (~8e7 lineitem rows per group at TPC-H value ranges;
+    sum_charge accumulates ~1.1e11 1e-6-dollar units per row): the
+    scaled money sums go long → decimal → ÷10^k in decimal → double,
+    so each is rounded once.  A long → double → ÷10^k scale-down would
+    round twice once a group's micro-unit sum passes 2^53, which
+    sum_charge does at ~8e4 rows per group.
     """
     l = table(spark, sf_dir, "lineitem")
     if spark.conf.get("spark.sec_edgar.longcents", "false") == "true":
@@ -163,14 +163,21 @@ def _q1_longcents(l: DataFrame) -> DataFrame:
             ).cast("double"),
         ).otherwise(expr)
 
+    def scaled(col, k):
+        # exact decimal scale-down, then ONE rounding to double
+        return (
+            F.col(col).cast("decimal(38,0)")
+            / F.lit(10**k).cast(f"decimal({k + 1},0)")
+        ).cast("double")
+
     cnt = F.col("count_order")
     return grouped.select(
         "l_returnflag",
         "l_linestatus",
         guarded(F.col("_sum_qc").cast("double") / 100).alias("sum_qty"),
         guarded(F.col("_sum_pc").cast("double") / 100).alias("sum_base_price"),
-        guarded(F.col("_sum_disc_u").cast("double") / 10_000).alias("sum_disc_price"),
-        guarded(F.col("_sum_charge_u").cast("double") / 1_000_000).alias("sum_charge"),
+        guarded(scaled("_sum_disc_u", 4)).alias("sum_disc_price"),
+        guarded(scaled("_sum_charge_u", 6)).alias("sum_charge"),
         guarded(F.col("_sum_qc").cast("double") / 100 / cnt).alias("avg_qty"),
         guarded(F.col("_sum_pc").cast("double") / 100 / cnt).alias("avg_price"),
         guarded(F.col("_sum_dc").cast("double") / 100 / cnt).alias("avg_disc"),

@@ -790,7 +790,7 @@ def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single double division keep the output driver-hash stable."""
     from ..operators.profile import ColumnSpec, profile_columns
 
-    li = table(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem", spread=True)
     return profile_columns(
         li,
         [
@@ -1085,7 +1085,7 @@ def agg_selfjoin_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.sketches import countmin_build, countmin_self_join_size
 
-    li = table(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem", spread=True)
     keys = li.select(F.col("l_partkey").cast("string").alias("k"))
     sketch = countmin_build(keys, "k", depth=4, width=256)
     est = countmin_self_join_size(sketch)

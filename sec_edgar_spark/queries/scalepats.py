@@ -1616,7 +1616,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     error bars on corpus statistics — one pass, no sampling state, and
     retries/replays produce identical intervals.
     """
-    o = table(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders", spread=True).select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )

@@ -56,9 +56,9 @@ EMB_VALID_WHERE = (
 _EMBV = f"(SELECT * FROM embeddings WHERE {EMB_VALID_WHERE})"
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _emb(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
     """The embeddings table under the validity gate (see EMB_VALID_WHERE)."""
-    return table(spark, sf_dir, "embeddings").filter(V.is_valid("embedding"))
+    return table(spark, sf_dir, "embeddings", spread).filter(V.is_valid("embedding"))
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -102,7 +102,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan, score JVM-side, take per-query top-k via window (ties
     broken by neighbor_id).  At scale: queries always broadcast; the
     corpus is never shuffled — only (n_queries × k) rows survive."""
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     # Precompute each vector's norm ONCE in a projection — computing it
     # inside the pair expression multiplies the fold by the pair count.
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -267,7 +267,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path is value-checked."""
     from ..operators.similarity import lsh_bucketed_topk
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     return lsh_bucketed_topk(
         e, e.filter(F.col("vec_id") < N_QUERIES), LSH_PLANES, k=TOP_K
     ).select("query_id", "neighbor_id", "cosine", "rk")
@@ -325,7 +325,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is value-checked end-to-end."""
     from ..operators.similarity import ivf_bucketed_topk
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     return ivf_bucketed_topk(
         e, e.filter(F.col("vec_id") < N_QUERIES), IVF_CENTROIDS, k=TOP_K
     ).select("query_id", "neighbor_id", "cosine", "rk")
@@ -425,7 +425,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same ``transform`` without the projection.  All expressions
     are per-row codegen'd math over the scan — a pure map stage.
     """
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     emb = V.as_double("embedding")
     absmax = F.aggregate(
         emb, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
@@ -526,7 +526,7 @@ def ml_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.kmeans import kmeans_fit_assign
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     out = kmeans_fit_assign(e, "vec_id", "embedding", k=4, n_iter=2)
     return out.select(F.col("id").alias("vec_id"), "cell")
 
@@ -568,7 +568,7 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.kmeans import kmeans_fit_assign
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     assign = kmeans_fit_assign(e, "vec_id", "embedding", k=8, n_iter=2)
     # cached: keyed feeds BOTH the broadcast probe side and the
     # candidate side of the within-cell join; uncached, the broadcast
@@ -723,7 +723,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.pq import pq_adc_topk, pq_train_encode
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     codes, books = pq_train_encode(
         e, "vec_id", "embedding", m=4, k=8, n_iter=2
     )
@@ -783,7 +783,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_fit_assign
     from ..operators.similarity import group_cosine_pairs
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     assign = kmeans_fit_assign(e, "vec_id", "embedding", k=8, n_iter=2)
     keyed = e.join(
         assign.select(F.col("id").alias("vec_id"), "cell"), "vec_id"
@@ -909,7 +909,7 @@ def dedup_semantic_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_fit_assign
     from ..operators.similarity import group_cosine_pairs
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     assign = kmeans_fit_assign(e, "vec_id", "embedding", k=8, n_iter=2)
     keyed = e.join(
         assign.select(F.col("id").alias("vec_id"), "cell"), "vec_id"
@@ -997,7 +997,7 @@ def dedup_semantic_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.kmeans import kmeans_fit_assign
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     assign = kmeans_fit_assign(e, "vec_id", "embedding", k=8, n_iter=2)
     keyed = e.join(
         assign.select(F.col("id").alias("vec_id"), "cell"), "vec_id"
@@ -1233,7 +1233,7 @@ def ml_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.kmeans import quantize_vectors
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     q = quantize_vectors(e, "vec_id", "embedding").join(
         e.select(F.col("vec_id").alias("id"), "label"), "id"
     )
@@ -2177,7 +2177,7 @@ def emb_dim_variance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     >2^63 sum would fail the final cast loudly in both engines rather
     than silently wrap mid-aggregation).
     """
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, spread=True)
     q = e.select(
         F.posexplode(V.as_double("embedding")).alias("dim", "v")
     ).select("dim", F.floor(F.col("v") * 65536).cast("bigint").alias("qv"))

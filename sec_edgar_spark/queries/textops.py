@@ -92,7 +92,7 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.text_analysis import token_aggregates
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     tok_agg = token_aggregates(d, "doc_id", "text", {"en": T.STOPWORDS["en"]})
     doc = d.select(
         "doc_id",
@@ -196,7 +196,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces it exactly)."""
     from ..operators.text_analysis import rolling_fingerprints
 
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     return rolling_fingerprints(d, "doc_id", "text")
 
 
@@ -358,7 +358,7 @@ def text_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone — per-doc ``array_distinct`` IS that distinct.  Only winnowed
     survivors reach the df-capped posting join.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", T.tokens("text").alias("ts")).filter(
         F.size("ts") >= _WIN_N + _WIN_W - 1
     )
@@ -484,7 +484,7 @@ def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected term lists are bounded by the smaller document's capped
     vocabulary.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     tok = d.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfv = (
@@ -683,7 +683,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is linear in token count; nothing is quadratic and nothing
     collects.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select(
         "doc_id", T.tokens("text").alias("_toks")
     )
@@ -1033,7 +1033,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     lengths are a per-doc hash agg joined on doc_id; top-20 is
     TakeOrderedAndProject with the (score, doc_id) total order.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     # One tokenize pass, ZERO corpus-wide token explodes (r13, guide
     # §2.3/§2.4).  The previous shape exploded every token of every
     # document into rows and consumed that stream THREE times (doc
@@ -1164,7 +1164,7 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unigram side when it fits); top-100 is a TakeOrdered, never a
     global sort materialization.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", T.tokens("text").alias("a"))
     tok = toks.select(F.explode("a").alias("tok"))
     uni = tok.groupBy("tok").agg(F.count("*").alias("c"))
@@ -1265,7 +1265,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     window work happens on a 10-row spine.  Nothing downstream of the
     aggs scales with the corpus.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     tok = d.select("doc_id", F.explode(T.tokens("text")).alias("tok"))
     maxid = d.agg(F.max("doc_id").alias("maxid"))
 
@@ -1361,7 +1361,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (the original formulation did, and that corpus-sized
     string-keyed join-back was ~35% of its wall time).
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     # Materialize the token split in its own projection and reference
     # it twice (r14, guide §1.2 per-task work): T.shingles("text", 8)
     # inlined the split into the transform lambda, and interpreted
@@ -1473,7 +1473,7 @@ def text_phrase_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten corpus between rounds instead of recomputing the chain
     (documented, not needed at gate scale).
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     # r13 measured note: caching each round's string corpus here was
     # tried (the persist-between-rounds production shape) and REVERTED
     # — at gate scale the bigram aggregate dominates each round and
@@ -2102,7 +2102,7 @@ def text_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigrams, a superset of true matches only where trigrams reorder
     (verified away).
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     # greatest(..., 0) guards sub-3-char texts: sequence(1, -1) would
     # auto-step DOWNWARD ([1, 0, -1]) and emit junk postings built from
     # zero/negative substring positions.  sequence(1, 0) is empty.
@@ -2430,7 +2430,7 @@ def text_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer key.  Never a float aggregate across tokens (order-
     dependent), never a global sort.
     """
-    d = table(spark, sf_dir, "documents").filter(
+    d = table(spark, sf_dir, "documents", spread=True).filter(
         F.col("source").isin(_DRIFT_A, _DRIFT_B)
     )
     tok = d.select("source", F.explode(T.tokens("text")).alias("token"))
@@ -2502,7 +2502,7 @@ def text_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     one documents scan shared by both needles; matches are the only
     surviving rows.  No shuffle at all.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     out = None
     for pat in _TRGM_PATTERNS:
         pos = F.instr("text", pat)
@@ -2573,7 +2573,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-limit frame (tiny-window whitelist), one 1-row moment
     aggregate.
     """
-    d = table(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents", spread=True)
     tok = d.select(F.explode(T.tokens("text")).alias("token"))
     freq = tok.groupBy("token").agg(F.count("*").cast("bigint").alias("f"))
     top = freq.orderBy(F.desc("f"), "token").limit(128)

@@ -161,3 +161,47 @@ def test_catalog_wires_autosize(spark):
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_scan_spread_only_below_scan_task_count(spark, tmp_path):
+    """catalog.table(spread=True) round-robins a scan over
+    stats.spread_parts tasks only when fewer scan tasks than that read
+    data: at most one per row group, and a file smaller than one byte
+    split is one task however many row groups it has.  spread=False
+    never repartitions."""
+    import hashlib
+
+    text = [hashlib.sha256(str(i).encode()).hexdigest() * 2 for i in range(2000)]
+    rows = pa.table({"doc_id": list(range(2000)), "text": text})
+    one, small, split = (tmp_path / d for d in ("one", "small", "split"))
+    for d in (one, small, split):
+        d.mkdir()
+    pq.write_table(rows, one / "documents.parquet")
+    # 8 row groups of ~32 KB: one 4 MB-open-cost split by default
+    for d in (small, split):
+        pq.write_table(rows, d / "documents.parquet", row_group_size=250)
+    par = spark.sparkContext.defaultParallelism
+    want = min(par, 2000 // stats.SPREAD_ROWS_PER_TASK)
+
+    def plan(sf_dir, spread):
+        df = catalog.table(spark, str(sf_dir), "documents", spread=spread)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    path = str(one / "documents.parquet")
+    assert stats.spread_parts(spark, path, 1) == want
+    assert f"Repartition {want}, true" in plan(one, True)
+    assert "Repartition" not in plan(one, False)
+    # many row groups, one split: still a single scan task -> spread
+    assert f"Repartition {want}, true" in plan(small, True)
+    # 8 KB splits put every row group in its own task (8 >= want on
+    # the suite's local[4]) -> no spread
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+    try:
+        assert "Repartition" not in plan(split, True)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    # row groups bound the data-reading tasks: 8 groups over 32 splits
+    # read like 8 tasks
+    assert stats.spread_parts(spark, str(split / "documents.parquet"), 32) is None
+    assert stats.spread_parts(spark, str(split / "documents.parquet"), 1) == want

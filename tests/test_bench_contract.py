@@ -33,3 +33,37 @@ def test_entry_contract_shapes():
         "text_compression_ratio",  # zlib has no SQL twin
     }, rows_only
     assert callable(E.entry)
+
+
+def _py_files(*roots):
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    for root in roots:
+        p = repo / root
+        yield from ([p] if p.is_file() else sorted(p.rglob("*.py")))
+
+
+def test_engine_conf_surface():
+    """The engine reads exactly three ``spark.sec_edgar.*`` keys; every
+    physical choice (scan spread, argmin path, partition counts) is
+    made by the query or from dataset statistics, never by a switch."""
+    import re
+
+    keys = set()
+    for f in _py_files("sec_edgar_spark"):
+        keys |= set(re.findall(r"spark\.sec_edgar\.(\w+)", f.read_text()))
+    assert keys == {"checkpoint_dir", "shard_root", "longcents"}, keys
+
+
+def test_bench_sets_no_per_query_plan_switch():
+    """The bench and the scale legs time the plans the correctness gate
+    checks: none of them sets a removed per-query plan switch."""
+    removed = ("scan_parallelize", "vectorized_argmin")
+    offenders = [
+        (str(f), key)
+        for f in _py_files("bench.py", "tools")
+        for key in removed
+        if key in f.read_text()
+    ]
+    assert not offenders, offenders

@@ -1,26 +1,18 @@
-"""Parity gate for the vectorized NumPy argmin kernel (r14).
+"""The k-means/PQ argmin (operators/kmeans: the map-only expression
+over the broadcast centroid array) against an independent
+brute-force replay written here in plain Python integers.
 
-operators/kmeans gained spark.sec_edgar.vectorized_argmin: the
-assignment argmin runs as one ArrowEvalPython pandas_udf instead of
-the interpreted Catalyst higher-order expression.  The contract is
-BIT-IDENTICAL results (exact int64 both ways, ties to the lowest cell
-id), so the flag can be flipped per deployment without touching any
-query's output — asserted here on shapes that exercise the tie-break
-and the grouped twin.
+Contract: nearest centroid by exact integer squared distance, ties to
+the LOWEST cell id; Lloyd updates are per-dim ``sum div count`` over
+the rows a cell won, seeded by the k smallest md5("c:" + id).  The
+plain and the grouped (PQ sub-space) shapes are both covered.
 """
 
-import pytest
+import hashlib
+
 from pyspark.sql import functions as F
 
 from sec_edgar_spark.operators import kmeans as K
-
-CONF = "spark.sec_edgar.vectorized_argmin"
-
-
-@pytest.fixture()
-def _flag_off_after(spark):
-    yield
-    spark.conf.set(CONF, "false")
 
 
 def _vecs(spark, n=40, d=6):
@@ -35,64 +27,89 @@ def _collect_sorted(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_assign_cells_parity_and_ties(spark, _flag_off_after):
-    df = _vecs(spark)
-    q = K.quantize_vectors(df, "id", "embedding")
+def _argmin(x, book):
+    """Brute-force nearest cell over ``book = [(cell, cv), ...]``:
+    strict minimum of the squared distance, ties to the lowest id."""
+    best = None
+    for cell, cv in sorted(book):
+        d = sum((a - b) ** 2 for a, b in zip(x, cv))
+        if best is None or d < best[0]:
+            best = (d, cell)
+    return best[1]
+
+
+def _lloyd(rows, k, n_iter):
+    """Pure-Python integer Lloyd loop over ``rows = {id: qv}``."""
+
+    def ik(i):
+        return hashlib.md5(f"c:{i}".encode()).hexdigest()
+
+    seeds = sorted(rows, key=lambda i: (ik(i), i))[:k]
+    book = [(c, rows[i]) for c, i in enumerate(seeds)]
+    for _ in range(n_iter):
+        won: dict = {}
+        for i, x in rows.items():
+            won.setdefault(_argmin(x, book), []).append(x)
+        # integer mean truncating toward zero, as Spark's ``div``
+        book = [
+            (c, [int(sum(col) / len(xs)) for col in zip(*xs)])
+            for c, xs in sorted(won.items())
+        ]
+    return book
+
+
+def _quantized(spark, n=40, d=6):
+    q = K.quantize_vectors(_vecs(spark, n, d), "id", "embedding")
+    return q, {r["id"]: list(r["qv"]) for r in q.collect()}
+
+
+def test_assign_cells_parity_and_ties(spark):
+    q, rows = _quantized(spark)
     cents = K.lloyd_fit(q, k=3, n_iter=1)
     # duplicate a centroid under a HIGHER cell id: every row nearest to
-    # it is now equidistant to two cells and must pick the lower id in
-    # BOTH paths
+    # it is now equidistant to two cells and must pick the lower id
     dup = cents.filter(F.col("cell") == 0).select(
         (F.col("cell") + 100).alias("cell"), "cv"
     )
     cents_ties = cents.unionByName(dup)
-    spark.conf.set(CONF, "false")
-    expr = _collect_sorted(K.assign_cells(q, cents_ties))
-    spark.conf.set(CONF, "true")
-    vec = _collect_sorted(K.assign_cells(q, cents_ties))
-    assert expr == vec
-    assert not any(cell >= 100 for _, cell in vec), (
-        "tie must resolve to the LOWER cell id in the kernel path"
-    )
+    book = [(r["cell"], list(r["cv"])) for r in cents_ties.collect()]
+    got = _collect_sorted(K.assign_cells(q, cents_ties))
+    assert got == sorted((i, _argmin(x, book)) for i, x in rows.items())
+    assert any(cell == 0 for _, cell in got)
+    assert not any(cell >= 100 for _, cell in got)
 
 
-def test_lloyd_fit_parity(spark, _flag_off_after):
-    df = _vecs(spark)
-    q = K.quantize_vectors(df, "id", "embedding")
-    spark.conf.set(CONF, "false")
-    expr = _collect_sorted(
-        K.lloyd_fit(q, k=4, n_iter=2).select(
-            "cell", F.col("cv").cast("string")
-        )
-    )
-    spark.conf.set(CONF, "true")
-    vec = _collect_sorted(
-        K.lloyd_fit(q, k=4, n_iter=2).select(
-            "cell", F.col("cv").cast("string")
-        )
-    )
-    assert expr == vec
+def test_lloyd_fit_parity(spark):
+    q, rows = _quantized(spark)
+    got = [
+        (r["cell"], list(r["cv"]))
+        for r in K.lloyd_fit(q, k=4, n_iter=2).orderBy("cell").collect()
+    ]
+    assert got == _lloyd(rows, k=4, n_iter=2)
 
 
-def test_grouped_parity(spark, _flag_off_after):
-    df = _vecs(spark, n=60, d=8)
-    q = K.quantize_vectors(df, "id", "embedding")
+def test_grouped_parity(spark):
+    # the PQ shape: every id appears once per sub-space g
+    q, rows = _quantized(spark, n=60, d=8)
     qg = q.select(
-        (F.col("id") % 2).alias("g"),
-        "id",
-        F.slice("qv", 1, 4).alias("qv"),
+        F.lit(0).cast("long").alias("g"), "id", F.slice("qv", 1, 4).alias("qv")
+    ).unionByName(
+        q.select(
+            F.lit(1).cast("long").alias("g"), "id", F.slice("qv", 5, 4).alias("qv")
+        )
     )
-    spark.conf.set(CONF, "false")
     cents = K.lloyd_fit_grouped(qg, k=3, n_iter=2)
-    expr_cents = _collect_sorted(
-        cents.select("g", "cell", F.col("cv").cast("string"))
+    got_cents = [
+        (r["g"], r["cell"], list(r["cv"]))
+        for r in cents.orderBy("g", "cell").collect()
+    ]
+    want_cents, want_assign = [], []
+    for g in (0, 1):
+        sub = {i: x[4 * g : 4 * g + 4] for i, x in rows.items()}
+        book = _lloyd(sub, k=3, n_iter=2)
+        want_cents += [(g, c, cv) for c, cv in book]
+        want_assign += [(g, i, _argmin(x, book)) for i, x in sub.items()]
+    assert got_cents == want_cents
+    assert _collect_sorted(K.assign_cells_grouped(qg, cents)) == sorted(
+        want_assign
     )
-    expr_assign = _collect_sorted(K.assign_cells_grouped(qg, cents))
-    spark.conf.set(CONF, "true")
-    cents_v = K.lloyd_fit_grouped(qg, k=3, n_iter=2)
-    vec_cents = _collect_sorted(
-        cents_v.select("g", "cell", F.col("cv").cast("string"))
-    )
-    vec_assign = _collect_sorted(K.assign_cells_grouped(qg, cents_v))
-    assert expr_cents == vec_cents
-    assert expr_assign == vec_assign

@@ -152,7 +152,7 @@ TINY_WINDOW_WHITELIST: set[str] = {
     "agg_equidepth_ntile",    # P-row offsets frame
     "edgar_company_pagination",  # bounded page spine
     # lloyd_fit's centroid seeding numbers a limit(k) frame (k rows,
-    # broadcast-sized) — operators/kmeans.py:56,167
+    # broadcast-sized) — operators/kmeans.py lloyd_fit/lloyd_fit_grouped
     "ml_kmeans_assign",
     "ann_ivf_trained",
     "ann_pq_adc_topk",

@@ -114,7 +114,6 @@ def build_sf100(spark) -> None:
 
 def main() -> int:
     import sec_edgar_spark.queries as Q
-    import bench
 
     probes = [a for a in sys.argv[1:] if not a.startswith("--")] or PROBES
 
@@ -167,10 +166,6 @@ def main() -> int:
     # warm; the sf100 probe alone is tens of seconds).  The cold
     # first-run walls are recorded in the JSON as first_run_s so the
     # one-time cost stays visible rather than hidden.
-    spark.conf.set(
-        "spark.sec_edgar.scan_parallelize",
-        "documents,embeddings" if probes[0] in bench.SCAN_PARALLELIZE else "",
-    )
     first_run = {}
     for label, d in (("sf10", SF10), ("sf100", SF100)):
         print(f"  warmup (untimed): {probes[0]} @ {label}", flush=True)
@@ -200,12 +195,6 @@ def main() -> int:
     for p in range(passes):
         for name in probes:
             fn = qs[name]
-            spark.conf.set(
-                "spark.sec_edgar.scan_parallelize",
-                "documents,embeddings"
-                if name in bench.SCAN_PARALLELIZE
-                else "",
-            )
             for label, d in (("sf10", SF10), ("sf100", SF100)):
                 spark.catalog.clearCache()
                 gid = f"sf100:{name}:{label}:{p}"

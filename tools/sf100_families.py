@@ -174,7 +174,6 @@ def build_sf100_relational(spark) -> None:
 def main() -> int:
     from sec_edgar_spark.session import builder
     import sec_edgar_spark.queries as Q
-    import bench
 
     only = [a for a in sys.argv[1:] if not a.startswith("--")]
 
@@ -223,10 +222,6 @@ def main() -> int:
     rows = []
     for name, variant, d10, d100 in legs:
         fn = qs[name]
-        spark.conf.set(
-            "spark.sec_edgar.scan_parallelize",
-            "documents,embeddings" if name in bench.SCAN_PARALLELIZE else "",
-        )
         fam = name.split("_")[0]
         if fam not in warmed:
             print(f"  warmup (untimed): {name} @ sf10/{variant}", flush=True)

@@ -160,7 +160,6 @@ def build_skewed(spark) -> None:
 def main() -> int:
     from sec_edgar_spark.session import get_spark
     import sec_edgar_spark.queries as Q
-    import bench
 
     probes = [a for a in sys.argv[1:] if not a.startswith("--")] or PROBES
 
@@ -190,10 +189,6 @@ def main() -> int:
     rows = []
     for name in probes:
         fn = qs[name]
-        spark.conf.set(
-            "spark.sec_edgar.scan_parallelize",
-            "documents,embeddings" if name in bench.SCAN_PARALLELIZE else "",
-        )
         walls = {}
         for label, d in (("uniform", SF10), ("skew", SKEW)):
             spark.catalog.clearCache()

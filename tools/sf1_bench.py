@@ -140,10 +140,6 @@ def main() -> int:
     rows = []
     for name in names:
         fn = qs[name]
-        spark.conf.set(
-            "spark.sec_edgar.scan_parallelize",
-            "documents,embeddings" if name in bench.SCAN_PARALLELIZE else "",
-        )
         walls = {}
         for label, d in (("sf0.1", BASE), ("sf1", SF1)):
             best = float("inf")

@@ -254,11 +254,6 @@ def main() -> int:
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
-    # Two-phase integer-cents money aggregation: bit-identical to the
-    # decimal path within its documented bound (queries/relational.py;
-    # verified identical at sf0.1 by tests/test_oracle_gate.py), ~35%
-    # faster q1 hash-agg.
-    spark.conf.set("spark.sec_edgar.longcents", "true")
     qs = Q.queries()
 
     # Warm the JVM (codegen/JIT), parquet footers and the reader path
@@ -330,7 +325,8 @@ def main() -> int:
     errors: dict[str, str] = {}
     for name in headline:
         fn = qs[name]
-        # Best-of-2 per query (same policy as tools/scale_probe.py):
+        # Best-of-2 per query (the scale legs, tools/scale.py, take
+        # the min of their warm passes the same way):
         # single-shot wall times on a shared box swing up to 5x on
         # whichever query catches a GC pause or a contending process —
         # round-to-round comparisons were drowning in that noise.  The

@@ -510,7 +510,7 @@ def skew_salted_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials.  Results are identical to the plain GROUP BY the oracle
     runs (only order-free aggregates here: counts, integer sums,
     min/max — double SUMs would round differently under re-ordering
-    and are kept on the decimal/longcents paths instead).
+    and are kept on the decimal paths instead).
     """
     from ..operators.relational import salted_aggregate
 

@@ -61,22 +61,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exercises partial (map-side) aggregation; the only shuffle carries 6
     tiny groups.  Filter and 7-column projection push to the parquet scan.
-
-    With ``spark.sec_edgar.longcents=true`` the money aggregates run
-    two-phase in integer cents (long partial sums, one scale-down at
-    the end) instead of decimal sums — the hash-agg update loop is
-    64-bit integer adds instead of 128-bit decimal adds.  Doubles out
-    are bit-identical to the decimal path up to the 2^63 overflow
-    guard (~8e7 lineitem rows per group at TPC-H value ranges;
-    sum_charge accumulates ~1.1e11 1e-6-dollar units per row): the
-    scaled money sums go long → decimal → ÷10^k in decimal → double,
-    so each is rounded once.  A long → double → ÷10^k scale-down would
-    round twice once a group's micro-unit sum passes 2^53, which
-    sum_charge does at ~8e4 rows per group.
     """
     l = table(spark, sf_dir, "lineitem")
-    if spark.conf.get("spark.sec_edgar.longcents", "false") == "true":
-        return _q1_longcents(l)
     qty = _dec(F.col("l_quantity"))
     price = _dec(F.col("l_extendedprice"))
     disc = _dec(F.col("l_discount"), 4, 2)
@@ -98,90 +84,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(disc).cast("double") / F.count("*")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-    )
-
-
-def _q1_longcents(l: DataFrame) -> DataFrame:
-    """Two-phase integer-cents formulation of q1 (see the flag note in
-    q1_pricing_summary).  qc/pc/dc/tc are exact cent counts of the
-    decimal(·,2) inputs, so every sum is an exact integer and the final
-    double conversions are the correctly-rounded values the decimal
-    path produces.
-
-    Overflow guard (runtime, in-plan, same single pass): long sums wrap
-    silently at 2^63, which ``charge_u`` (~1.1e11 micro-units/row at
-    TPC-H value ranges) reaches around 8e7 rows per group (SF >= ~25).
-    The aggregate also carries ``count * max(|charge_u|)`` evaluated in
-    double — a conservative upper bound on the true |sum| — and every
-    money output raises a descriptive error when the bound crosses the
-    safe line instead of emitting a silently-wrapped number.  Cost: two
-    extra per-group max/count slots on a 6-group aggregate, no second
-    scan.  On overflow, rerun with spark.sec_edgar.longcents=false (the
-    decimal path has no bound).
-    """
-    qc = F.round(_dec(F.col("l_quantity")) * 100).cast("long")
-    pc = F.round(_dec(F.col("l_extendedprice")) * 100).cast("long")
-    dc = F.round(_dec(F.col("l_discount"), 4, 2) * 100).cast("long")
-    tc = F.round(_dec(F.col("l_tax"), 4, 2) * 100).cast("long")
-    grouped = (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            qc.alias("qc"),
-            pc.alias("pc"),
-            dc.alias("dc"),
-            (pc * (100 - dc)).alias("disc_u"),  # 1e-4 dollars
-            (pc * (100 - dc) * (100 + tc)).alias("charge_u"),  # 1e-6 dollars
-        )
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("qc").alias("_sum_qc"),
-            F.sum("pc").alias("_sum_pc"),
-            F.sum("dc").alias("_sum_dc"),
-            F.sum("disc_u").alias("_sum_disc_u"),
-            F.sum("charge_u").alias("_sum_charge_u"),
-            F.max(F.abs(F.col("charge_u"))).alias("_max_charge_u"),
-            F.count("*").alias("count_order"),
-        )
-    )
-    # count * max|charge_u| >= |sum(charge_u)|; if even the bound stays
-    # under 2^63 (with headroom) the long sum cannot have wrapped.
-    risk = (
-        F.col("count_order").cast("double") * F.col("_max_charge_u").cast("double")
-        > 9.0e18
-    )
-
-    def guarded(expr):
-        return F.when(
-            risk,
-            F.raise_error(
-                F.lit(
-                    "longcents int64 overflow risk for this group; "
-                    "rerun with spark.sec_edgar.longcents=false"
-                )
-            ).cast("double"),
-        ).otherwise(expr)
-
-    def scaled(col, k):
-        # exact decimal scale-down, then ONE rounding to double
-        return (
-            F.col(col).cast("decimal(38,0)")
-            / F.lit(10**k).cast(f"decimal({k + 1},0)")
-        ).cast("double")
-
-    cnt = F.col("count_order")
-    return grouped.select(
-        "l_returnflag",
-        "l_linestatus",
-        guarded(F.col("_sum_qc").cast("double") / 100).alias("sum_qty"),
-        guarded(F.col("_sum_pc").cast("double") / 100).alias("sum_base_price"),
-        guarded(scaled("_sum_disc_u", 4)).alias("sum_disc_price"),
-        guarded(scaled("_sum_charge_u", 6)).alias("sum_charge"),
-        guarded(F.col("_sum_qc").cast("double") / 100 / cnt).alias("avg_qty"),
-        guarded(F.col("_sum_pc").cast("double") / 100 / cnt).alias("avg_price"),
-        guarded(F.col("_sum_dc").cast("double") / 100 / cnt).alias("avg_disc"),
-        "count_order",
     )
 
 

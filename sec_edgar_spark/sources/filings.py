@@ -9,15 +9,20 @@ global rate limit, client.py:221-277) is deliberately isolated here:
 - **Live-fetch stage**: ``fetch_urls`` runs HTTP GETs inside
   ``mapPartitions``.  A 10 req/s *global* cap makes cluster parallelism
   pointless (SURVEY §7 risk 1), so the live stage coalesces to ONE
-  partition and paces itself with a token bucket — byte-identical
-  semantics to the reference's pacing loop, still expressed as a
-  DataFrame transform.  Tests inject a fake ``http_get``.
+  partition and paces every request attempt, retries included, with
+  a token pool (``Pacer``) — still expressed as a DataFrame transform.
+  Tests inject a fake ``http_get`` and, for the pacing rule, a fake
+  clock.
 """
 
 from __future__ import annotations
 
+import heapq
+import threading
 import time
-from collections.abc import Callable, Iterator
+from collections import deque
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -39,6 +44,102 @@ FETCH_RESULT = StructType(
 )
 
 
+class Pacer:
+    """Per-attempt request budget shared by one task's fetch threads.
+
+    Attempt *i* may start only one second after attempt
+    *i − limit* has completed: each of ``limit`` tokens is held from an
+    attempt's start until one second after its completion.  Every
+    server-side arrival lies between its attempt's start and
+    completion, so any ``limit + 1`` arrivals span at least one second
+    — the bound holds at the server, retries included, not only in the
+    client's bookkeeping.  ``clock`` and ``sleep`` are injectable so the
+    rule is testable on a fake clock.
+    """
+
+    def __init__(
+        self,
+        limit: int,
+        clock: Callable[[], float] = time.monotonic,
+        sleep: Callable[[float], None] = time.sleep,
+    ):
+        self._free = [float("-inf")] * limit  # min-heap of token-ready times
+        self._cv = threading.Condition()
+        self._turn = threading.Lock()  # one waiter sleeps at a time, FIFO
+        self._clock, self._sleep = clock, sleep
+
+    def acquire(self) -> None:
+        with self._turn:
+            with self._cv:
+                while not self._free:
+                    self._cv.wait()
+                ready = heapq.heappop(self._free)
+            wait = ready - self._clock()
+            if wait > 0:
+                self._sleep(wait)
+
+    def release(self) -> None:
+        done = self._clock()
+        with self._cv:
+            heapq.heappush(self._free, done + 1.0)
+            self._cv.notify()
+
+
+def paced_fetch(
+    urls: Iterable[str],
+    http_get: Callable[[str], tuple[int, bytes]],
+    rate_limit: int = 10,
+    retry_count: int = 3,
+    backoff_factor: float = 0,
+    validate: bool = True,
+    sleep: Callable[[float], None] = time.sleep,
+    clock: Callable[[], float] = time.monotonic,
+) -> Iterator[Row]:
+    """The executor side of ``fetch_urls``: ``rate_limit`` threads, every
+    ``http_get`` attempt (retries included) through one ``Pacer``.
+    Yields one result row per URL, in input order."""
+    from ..exceptions import EDGARQueryError
+    from .client import get_with_retry
+
+    pacer = Pacer(rate_limit, clock=clock, sleep=sleep)
+
+    def paced_get(u: str) -> tuple[int, bytes]:
+        pacer.acquire()
+        try:
+            return http_get(u)
+        finally:
+            pacer.release()
+
+    def fetch_one(u: str) -> Row:
+        try:
+            status, content = get_with_retry(
+                paced_get,
+                u,
+                retry_count=retry_count,
+                backoff_factor=backoff_factor,
+                validate=validate,
+                sleep=sleep,
+            )
+            return Row(url=u, status=status, content=content, error=None)
+        except EDGARQueryError as exc:
+            return Row(url=u, status=None, content=None, error=str(exc))
+
+    # Concurrent threads (the reference's aiohttp batch,
+    # client.py:266-277): a serial loop would cap throughput at
+    # 1/latency req/s, not rate_limit req/s, the moment EDGAR responses
+    # are slower than 1/rate_limit seconds.
+    with ThreadPoolExecutor(max_workers=rate_limit) as pool:
+        pending: deque = deque()
+        for u in urls:
+            pending.append(pool.submit(fetch_one, u))
+            # bounded look-ahead: the threads stay busy while results
+            # leave in input order, without queueing the whole partition
+            if len(pending) > 2 * rate_limit:
+                yield pending.popleft().result()
+        while pending:
+            yield pending.popleft().result()
+
+
 def fetch_urls(
     urls: DataFrame,
     http_get: Callable[[str], tuple[int, bytes]],
@@ -56,9 +157,10 @@ def fetch_urls(
     each request passing through Retry(retry_count, backoff_factor,
     raise_on_status=True) + EDGAR response validation
     (client.py:154-205).  Implemented as a single-partition
-    mapPartitions with per-second batch pacing — the global budget
-    cannot be shared across executors, and at ≤10 req/s one task IS the
-    throughput ceiling.
+    mapPartitions over ``paced_fetch`` — the global budget cannot be
+    shared across executors, and at ≤10 req/s one task IS the
+    throughput ceiling.  The budget is spent per attempt: a retry takes
+    a token like a first request does.
 
     A URL that exhausts its retries or fails validation is NOT allowed
     to kill the whole job (at scale one poisoned URL out of millions
@@ -70,46 +172,16 @@ def fetch_urls(
     if rate_limit > 10:
         raise ValueError("rate_limit must be ≤ 10 (EDGAR fair-access policy)")
 
-    from ..exceptions import EDGARQueryError
-    from .client import get_with_retry
-
-    def fetch_one(u: str) -> Row:
-        try:
-            status, content = get_with_retry(
-                http_get,
-                u,
-                retry_count=retry_count,
-                backoff_factor=backoff_factor,
-                validate=validate,
-                sleep=sleep,
-            )
-            return Row(url=u, status=status, content=content, error=None)
-        except EDGARQueryError as exc:
-            return Row(url=u, status=None, content=None, error=str(exc))
-
-    def fetch_batch(batch: list[str]) -> list[Row]:
-        # Fire the whole 1-second budget CONCURRENTLY (the reference's
-        # aiohttp batch, client.py:266-277): a serial loop would cap
-        # throughput at 1/latency req/s, not rate_limit req/s, the
-        # moment EDGAR responses are slower than 1/rate_limit seconds.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(batch)) as pool:
-            return list(pool.map(fetch_one, batch))
-
     def run(rows: Iterator[Row]) -> Iterator[Row]:
-        batch: list[str] = []
-        for row in rows:
-            batch.append(row.url)
-            if len(batch) == rate_limit:
-                start = time.monotonic()
-                yield from fetch_batch(batch)
-                elapsed = time.monotonic() - start
-                if elapsed < 1.0:
-                    time.sleep(1.0 - elapsed)
-                batch = []
-        if batch:
-            yield from fetch_batch(batch)
+        return paced_fetch(
+            (row.url for row in rows),
+            http_get,
+            rate_limit=rate_limit,
+            retry_count=retry_count,
+            backoff_factor=backoff_factor,
+            validate=validate,
+            sleep=sleep,
+        )
 
     return urls.select("url").coalesce(1).rdd.mapPartitions(run).toDF(FETCH_RESULT)
 

@@ -45,7 +45,7 @@ def _py_files(*roots):
 
 
 def test_engine_conf_surface():
-    """The engine reads exactly three ``spark.sec_edgar.*`` keys; every
+    """The engine reads exactly two ``spark.sec_edgar.*`` keys; every
     physical choice (scan spread, argmin path, partition counts) is
     made by the query or from dataset statistics, never by a switch."""
     import re
@@ -53,13 +53,13 @@ def test_engine_conf_surface():
     keys = set()
     for f in _py_files("sec_edgar_spark"):
         keys |= set(re.findall(r"spark\.sec_edgar\.(\w+)", f.read_text()))
-    assert keys == {"checkpoint_dir", "shard_root", "longcents"}, keys
+    assert keys == {"checkpoint_dir", "shard_root"}, keys
 
 
 def test_bench_sets_no_per_query_plan_switch():
     """The bench and the scale legs time the plans the correctness gate
     checks: none of them sets a removed per-query plan switch."""
-    removed = ("scan_parallelize", "vectorized_argmin")
+    removed = ("scan_parallelize", "vectorized_argmin", "longcents")
     offenders = [
         (str(f), key)
         for f in _py_files("bench.py", "tools")

@@ -162,6 +162,54 @@ def test_fetch_urls_records_errors_not_abort(spark):
     assert got["invalid"].content is None and "not valid" in got["invalid"].error
 
 
+def test_paced_fetch_retry_storm_holds_rate_on_fake_clock():
+    """20 URLs, each failing 3x before a 200, at rate_limit=10: all 80
+    attempts (retries included) pass the pacer, so no 1-second window
+    holds more than 10 attempt starts.  The clock only moves when the
+    pacer sleeps, so the check is exact and needs no Spark."""
+    import threading
+
+    from sec_edgar_spark.sources.filings import paced_fetch
+
+    now = [0.0]
+    lock = threading.Lock()
+    starts: list[float] = []
+    fails: dict[str, int] = {}
+
+    def clock():
+        with lock:
+            return now[0]
+
+    def sleep(s):
+        with lock:
+            now[0] += s
+
+    def http_get(u):
+        with lock:
+            starts.append(now[0])
+            fails[u] = fails.get(u, 0) + 1
+            n = fails[u]
+        return (503, b"") if n <= 3 else (200, u.encode())
+
+    rows = list(
+        paced_fetch(
+            [f"u{i}" for i in range(20)],
+            http_get,
+            rate_limit=10,
+            retry_count=3,
+            validate=False,
+            sleep=sleep,
+            clock=clock,
+        )
+    )
+    assert [r.url for r in rows] == [f"u{i}" for i in range(20)]
+    assert all(r.status == 200 and r.error is None for r in rows)
+    assert len(starts) == 80
+    starts.sort()
+    spans = [starts[i + 10] - starts[i] for i in range(len(starts) - 10)]
+    assert min(spans) >= 1.0, spans
+
+
 def test_fetch_urls_batch_is_concurrent(spark):
     """10 slow (0.2s) responses per batch must complete in ~one
     latency, not 10 serial latencies (reference's aiohttp batch)."""

@@ -170,6 +170,10 @@ def test_fetch_urls_real_socket_rate_conformance(spark, server):
         # clean clustering: additionally check burst-start pacing
         gaps = [b[0] - a[0] for a, b in zip(clusters, clusters[1:])]
         assert all(g >= 0.95 for g in gaps), gaps
+    # the sliding-window form of the same rule: any 11 consecutive
+    # arrivals span at least one second
+    spans = [stamps[i + 10] - stamps[i] for i in range(len(stamps) - 10)]
+    assert min(spans) >= 1.0, spans
 
 
 def test_fetch_urls_real_socket_retry_and_error_capture(spark, server):

@@ -64,64 +64,6 @@ def test_oracle_parity(name, spark, duck):
     assert not problems, f"{name}: {problems}"
 
 
-def test_q1_longcents_parity(spark):
-    """The long-cents two-phase q1 (spark.sec_edgar.longcents=true) must
-    produce bit-identical rows to the decimal path within its documented
-    exactness bound."""
-    import __spark_entry__ as entrymod
-
-    q1 = entrymod.queries()["q1_pricing_summary"]
-    spark.conf.set("spark.sec_edgar.longcents", "false")
-    dec_rows = {tuple(r[:2]): r for r in q1(spark, SF_DIR).collect()}
-    spark.conf.set("spark.sec_edgar.longcents", "true")
-    try:
-        long_rows = {tuple(r[:2]): r for r in q1(spark, SF_DIR).collect()}
-    finally:
-        spark.conf.set("spark.sec_edgar.longcents", "false")
-    assert dec_rows.keys() == long_rows.keys()
-    for k in dec_rows:
-        assert dec_rows[k] == long_rows[k], k
-
-
-def test_q1_longcents_parity_past_2_53(spark, tmp_path):
-    """Long-cents q1 stays bit-identical once a group's micro-unit
-    charge sum passes 2^53: the sf0.1 R/O lineitem rows ×10 leave
-    534 040 rows in one group after the q1 filter (sum_charge ≈
-    2.8e10 dollars = 2.8e16 micro-units), where a long → double →
-    ÷10^6 scale-down rounds twice."""
-    base = "/root/testdata/sf0.1/lineitem.parquet"
-    if not os.path.exists(base):
-        pytest.skip("sf0.1 testdata not present")
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    cols = [
-        "l_returnflag", "l_linestatus", "l_shipdate", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax",
-    ]
-    li = pq.read_table(base, columns=cols)
-    ro = li.filter(
-        pc.and_(
-            pc.equal(li["l_returnflag"], "R"), pc.equal(li["l_linestatus"], "O")
-        )
-    )
-    pq.write_table(pa.concat_tables([ro] * 10), tmp_path / "lineitem.parquet")
-    sf_dir = str(tmp_path)
-
-    q1 = QUERIES["q1_pricing_summary"]
-    spark.conf.set("spark.sec_edgar.longcents", "false")
-    dec_rows = q1(spark, sf_dir).collect()
-    spark.conf.set("spark.sec_edgar.longcents", "true")
-    try:
-        long_rows = q1(spark, sf_dir).collect()
-    finally:
-        spark.conf.set("spark.sec_edgar.longcents", "false")
-    assert len(dec_rows) == 1 and dec_rows[0]["count_order"] == 534_040
-    assert dec_rows[0]["sum_charge"] * 1e6 > 2**53
-    assert long_rows == dec_rows
-
-
 @pytest.mark.slow
 def test_oracle_parity_sf001_sweep(spark):
     """Driver-gate-scale sweep (marker: slow): the full registry against

@@ -37,6 +37,7 @@ class GroupMetrics:
     """
 
     def __init__(self, spark):
+        self._spark = spark
         self._sc = spark.sparkContext
         self._ui = self._sc.uiWebUrl
         self._app_id = None
@@ -115,7 +116,33 @@ class GroupMetrics:
                     "spill_mb": round(
                         s.get("diskBytesSpilled", 0) / 1e6, 1
                     ),
+                    "mem_spill_mb": round(
+                        s.get("memoryBytesSpilled", 0) / 1e6, 1
+                    ),
                 }
             )
         rows.sort(key=lambda r: -r["run_s"])
         return rows[:top]
+
+    def drain(self) -> None:
+        """Wait until the listener bus has delivered every event, so the
+        status stores hold the group's finished stages and plans."""
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def skew_join_split(self, group_id: str) -> bool:
+        """Whether AQE split a skewed join in a plan the group ran.
+
+        Reads the SQL executions the group started, whose stored plan
+        is the final adaptive plan once they ran.  A DataFrame's own
+        ``queryExecution`` is the wrong place: a write or another
+        action plans and runs its own QueryExecution, so the
+        DataFrame's adaptive plan never runs and never splits.  Works
+        with the UI off (the SQL status listener always runs)."""
+        self.drain()
+        store = self._spark._jsparkSession.sharedState().statusStore()
+        execs = store.executionsList()
+        return any(
+            execs.apply(i).description() == group_id
+            and "skew=true" in execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+        )

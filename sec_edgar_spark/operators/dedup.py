@@ -272,7 +272,10 @@ def fused_doc_frame(
     ``spark.catalog.clearCache()`` or session end; batch callers that
     time/isolate queries (bench.py, tools/*) clear the catalog cache
     between runs, and the streaming path re-builds it per micro-batch
-    (each batch is a new frame, so no cross-batch growth)."""
+    (each batch is a new frame, so no cross-batch growth).  Being
+    map-only, the cached frame keeps the scan's partitioning: the
+    session's cached-plan coalescing (session.py) has no shuffle to
+    coalesce here."""
     base = shingle_arrays(df, id_col, text_col, shingle_n)
     hs = base.select(
         F.col(id_col),
@@ -763,9 +766,15 @@ def prefix_filter_join(
         cand_parts = exchange_partitions(df.sparkSession, est_pairs * 32)
     docs = docs.cache()
     # ^ three consumers (posting + both verify sides); measured 1.5x at
-    # sf0.01.  The cache lives until the session drops it — long-lived
-    # sessions running many queries should spark.catalog.clearCache()
-    # between them (bench.py and tools/check_oracle.py already do).
+    # sf0.01.  docs is a groupBy output, so its cached partitioning is
+    # AQE's coalesced one (session.py lets AQE change cached plans):
+    # with spark.sql.shuffle.partitions partitions instead, every
+    # consumer ran that many near-empty tasks
+    # (dedup_prefix_filter_capped at sf0.01, local[4]: 523 tasks per
+    # execution before, 25 after).  The cache lives until the session
+    # drops it — long-lived sessions running many queries should
+    # spark.catalog.clearCache() between them (bench.py and
+    # tools/check_oracle.py already do).
     posting = docs.select(
         F.col(id_col), "n", F.explode("prefix").alias("tok")
     )

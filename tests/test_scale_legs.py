@@ -8,10 +8,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from sec_edgar_spark import catalog
 from sec_edgar_spark.catalog import DEFAULT_SF_DIR, table
 from tools import scale
 
@@ -74,6 +76,20 @@ def test_skew_hot_keys_and_token_head(spark, replica, tmp_path):
     assert 0.05 <= head <= 0.15, head
     # untouched tables are the source's files
     assert os.path.realpath(f"{out}/part.parquet") == os.path.realpath(f"{replica}/part.parquet")
+
+
+@needs_sf
+def test_untouched_table_links_are_relative_and_survive_a_move(spark, tmp_path):
+    tree = tmp_path / "tree"
+    shutil.copytree(SF, tree / "base")
+    scale.skew(spark, str(tree / "base"), str(tree / "skew"), tables=("events",))
+    links = [p for p in (tree / "skew").iterdir() if p.is_symlink()]
+    assert {p.name for p in links} == {f"{t}.parquet" for t in catalog.TABLES if t != "events"}
+    assert all(os.readlink(p) == f"../base/{p.name}" for p in links)
+    moved = tmp_path / "moved"
+    shutil.move(str(tree), str(moved))
+    assert all((moved / "skew" / p.name).exists() for p in links)
+    assert table(spark, str(moved / "skew"), "part").count() == table(spark, SF, "part").count()
 
 
 @needs_sf

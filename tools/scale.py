@@ -199,10 +199,12 @@ def materialize(spark, d: Dataset, src: str, tables=None) -> None:
         df = df.coalesce(n) if d.copies > 1 else df.repartition(n)
         df.write.mode("overwrite").parquet(f"{d.path}/{t}.parquet")
     if d.copies == 1:
+        # Relative links: the dataset still resolves when the tree that
+        # holds it and its source is moved or checked out elsewhere.
         for t in catalog.TABLES:
-            dst, target = f"{d.path}/{t}.parquet", f"{os.path.abspath(src)}/{t}.parquet"
+            dst, target = f"{d.path}/{t}.parquet", f"{src}/{t}.parquet"
             if not os.path.lexists(dst) and os.path.exists(target):
-                os.symlink(target, dst)
+                os.symlink(os.path.relpath(target, d.path), dst)
 
 
 def replicate(spark, base: str, out: str, copies: int, stride: int = 1,

@@ -843,6 +843,38 @@ def prefix_filter_join(
     )
 
 
+def _simhash_chunk_pairs(
+    chunks: DataFrame, id_col: str, max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) from ``(id_col, simhash, pos, chunk)`` rows:
+    documents sharing a chunk value at the same position become
+    candidates (an equi-join on (pos, chunk), id_a < id_b, deduplicated
+    across positions), kept iff the popcount of their fingerprints' XOR
+    is <= ``max_hamming``."""
+    a = chunks.alias("a")
+    b = chunks.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.pos") == F.col("b.pos"))
+            & (F.col("a.chunk") == F.col("b.chunk"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col("a.simhash").alias("fp_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("b.simhash").alias("fp_b"),
+        )
+        .distinct()
+    )
+    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    return (
+        cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_hamming_pairs(
     df: DataFrame,
     id_col: str,
@@ -896,28 +928,7 @@ def simhash_hamming_pairs(
             )
         ).alias("pos", "chunk"),
     )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.pos") == F.col("b.pos"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("b.simhash").alias("fp_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_chunk_pairs(chunks, id_col, max_hamming)
 
 
 def simhash_fingerprints(
@@ -1034,25 +1045,4 @@ def simhash_adaptive_pairs(
             ),
         )
     )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.pos") == F.col("b.pos"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("b.simhash").alias("fp_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_chunk_pairs(chunks, id_col, max_hamming)

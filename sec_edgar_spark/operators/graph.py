@@ -1,11 +1,26 @@
-"""Connected components over a pair list — dedup cluster assignment.
+"""Graph operators over an edge list.
 
-After candidate generation + verification (MinHash-LSH, ngram-Jaccard,
-SimHash...), near-duplicate PAIRS must become CLUSTERS so a pipeline can
-keep one canonical document per group: pairs (a,b),(b,c) are one
-3-document cluster even though (a,c) never met in any bucket.  That is
-connected components, the one genuinely iterative algorithm in the
-dedup family.
+- :func:`connected_components` — reachability by label propagation
+  (dedup and curation clusters); :func:`canonical_assignment` reads
+  it.  :func:`wcc_star` computes the same rows by star contraction,
+  which wins where dense clusters shrink its working set (trade-graph
+  WCC, entity groups; measured in its docstring).
+- :func:`label_propagation` — communities.
+- :func:`kcore_fixpoint` — k-core peeling, to the fixpoint or capped
+  at a fixed round count.
+- :func:`ppr_int` — integer PageRank, personalized to a seed set;
+  every node a seed is plain PageRank.
+
+Every operator treats its input as undirected.  All but
+:func:`wcc_star` read it through :func:`_symmetric`, which unions both
+directions, deduplicates and cuts the lineage once for every round to
+read.
+
+Connected components.  After candidate generation + verification
+(MinHash-LSH, ngram-Jaccard, SimHash...), near-duplicate PAIRS must
+become CLUSTERS so a pipeline can keep one canonical document per
+group: pairs (a,b),(b,c) are one 3-document cluster even though (a,c)
+never met in any bucket.
 
 Formulation: min-label propagation (hook) + pointer jumping
 (compress), the data-parallel Shiloach–Vishkin shape.  Every node
@@ -21,7 +36,8 @@ diameter-D component converges in O(log D) rounds (a 100k-node chain:
 Compression preserves the invariant that a node's label is always the
 id of some node in its own component and never below the component
 min (it jumps to label[label], which is <= label and co-component),
-so the fixpoint is still exactly label = component min.
+so the fixpoint is still exactly label = component min.  A node whose
+only edge is a self-loop is its own component.
 
 Scale shape per round: one shuffle join (labels onto edge endpoints) +
 one groupBy(min) for the hook, one self-equi-join for the compress —
@@ -29,8 +45,7 @@ all partial-aggregated / hash joins; the driver only runs the
 convergence check (a count), never touches row data.  Lineage is cut
 every round with lineage_cut (localCheckpoint, or reliable checkpoint
 when spark.sec_edgar.checkpoint_dir is set) so plans stay O(1) deep
-regardless of
-iteration count.
+regardless of iteration count.
 """
 
 from __future__ import annotations
@@ -39,6 +54,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._lineage import lineage_cut
+
+
+def _symmetric(
+    edges: DataFrame, src: str, dst: str, eager: bool = True
+) -> DataFrame:
+    """Undirected, deduplicated ``(s, d)`` edge list of ``edges`` (both
+    directions of every edge), lineage cut.  ``eager=False`` leaves the
+    materialization to the caller's next action."""
+    return (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        .distinct()
+        .transform(lambda df: lineage_cut(df, eager=eager))
+    )
 
 
 def connected_components(
@@ -51,12 +80,7 @@ def connected_components(
     id reachable.  Deterministic.  Raises if not converged in
     ``max_iter`` rounds (~log2(diameter) + slack needed — raise for
     extreme graphs)."""
-    sym = (
-        edges.select(F.col(src).alias("id"), F.col(dst).alias("nbr"))
-        .unionByName(edges.select(F.col(dst).alias("id"), F.col(src).alias("nbr")))
-        .distinct()
-        .transform(lineage_cut)
-    )
+    sym = _symmetric(edges, src, dst).toDF("id", "nbr")
     labels = sym.select("id").distinct().select(
         "id", F.col("id").alias("label")
     ).transform(lineage_cut)
@@ -123,78 +147,6 @@ def connected_components(
     )
 
 
-def pagerank_int(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    scale: int = 10**12,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """(id, rank) after ``iters`` synchronous PageRank rounds, in
-    integer micro-units (rank mass ``scale`` split over N nodes) so the
-    result is bit-identical across engines and cluster layouts — no
-    floating-point sum-order sensitivity, which is what makes iterative
-    rank scores normally impossible to value-check distributively.
-
-    Arithmetic per round (all non-negative BIGINT, overflow-safe for
-    scale<=1e12 since 85*sum_contrib <= 85*scale ~ 8.5e13 << 2^63):
-        contrib(v)  = rank(v) div out_deg(v)
-        rank'(u)    = (15*scale div 100) div N
-                      + (85 * sum_{v->u} contrib(v)) div 100
-    Dangling nodes never exist because the input is symmetrized (and
-    deduplicated) INTERNALLY — the standard undirected-PageRank
-    formulation for influence scoring on similarity/co-occurrence
-    graphs, and the same caller contract as
-    :func:`connected_components` / :func:`label_propagation` (passing
-    already-symmetric edges is a no-op thanks to the distinct).  A
-    directed formulation would silently leak rank mass at dst-only
-    nodes, so this operator refuses to be one.
-
-    Scale shape per round: one shuffle join (ranks onto edge sources,
-    partitioned by node id) + one partial-aggregated groupBy(dst) —
-    identical to :func:`connected_components`'s hook step; lineage cut
-    per round with lineage_cut.  The driver never sees row data.
-    """
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    sym = fwd.unionByName(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct().transform(lineage_cut)
-    deg = sym.groupBy("s").agg(F.count("*").alias("deg"))
-    nodes = sym.select(F.col("s").alias("id")).distinct().transform(lineage_cut)
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("id", F.lit(0).cast("bigint").alias("rank"))
-    teleport = (15 * scale // 100) // n
-    ranks = nodes.select("id", F.lit(scale // n).cast("bigint").alias("rank"))
-    for _ in range(iters):
-        contrib = (
-            ranks.join(deg, ranks["id"] == deg["s"])
-            .select("id", F.expr("rank div deg").alias("contrib"))
-        )
-        inbound = (
-            sym.join(contrib.withColumnRenamed("id", "s"), "s")
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.sum("contrib").alias("s_in"))
-        )
-        ranks = (
-            nodes.join(inbound, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.expr("85 * coalesce(s_in, 0L) div 100")
-                ).cast("bigint").alias("rank"),
-            )
-            # lazy cut (r13): fixed-iteration loop with no per-round
-            # action and ONE consumer of each round's output — the
-            # final action computes the whole chain in one job while
-            # the plan stays truncated per round.
-            .transform(lambda d: lineage_cut(d, eager=False))
-        )
-    return ranks
-
-
 def canonical_assignment(
     edges: DataFrame,
     src: str = "src",
@@ -217,7 +169,7 @@ def label_propagation(
     """(id, community) after ``iters`` synchronous label-propagation
     rounds — community detection (dense groups), complementing
     :func:`connected_components` (reachability) and
-    :func:`pagerank_int` (influence).
+    :func:`ppr_int` (influence).
 
     Fully deterministic: each round every node adopts the label that
     is most frequent among its neighbours, ties broken by the SMALLER
@@ -232,21 +184,16 @@ def label_propagation(
     partial-aggregated; WindowGroupLimit keeps the top-1 from sorting
     whole vote lists.  Lineage cut per round with lineage_cut.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .transform(lineage_cut)
-    )
-    labels = sym.select(F.col("a").alias("id")).distinct().select(
+    sym = _symmetric(edges, src, dst)
+    labels = sym.select(F.col("s").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
     for _ in range(iters):
         votes = (
             sym.join(
-                labels.select(F.col("id").alias("b"), "label"), "b"
+                labels.select(F.col("id").alias("d"), "label"), "d"
             )
-            .groupBy(F.col("a").alias("id"), "label")
+            .groupBy(F.col("s").alias("id"), "label")
             .agg(F.count("*").alias("n"))
         )
         w = Window.partitionBy("id").orderBy(F.desc("n"), F.asc("label"))
@@ -261,53 +208,22 @@ def label_propagation(
     return labels.select("id", F.col("label").alias("community"))
 
 
-def kcore_prune(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """``rounds`` synchronous k-core pruning steps over an undirected
-    edge list ``(s, d)``: each round drops every node whose CURRENT
-    degree is below ``k`` (and the edges touching it), simultaneously —
-    the deterministic fixed-round form of k-core decomposition (run to
-    fixpoint it yields the exact k-core; fixed rounds keep the
-    trajectory engine-replayable, the same contract as
-    label_propagation/pagerank_int).  Returns the surviving
-    ``(id, degree)`` frame.
-
-    Scale shape per round: one degree aggregate (map-combined) + two
-    semi-joins to keep edges whose BOTH endpoints survive — no
-    collect, no driver loop.  Lineage is cut per round with
-    lineage_cut (same discipline as label_propagation above):
-    each round references the previous survivor set THREE times
-    (degree agg + two semi-join probes), so without truncation the
-    unrolled plan grows ~3^rounds (measured: 134 Exchanges at
-    rounds=3).  With the cut the executed plan is O(1) per round —
-    one materialised survivor scan feeding three consumers — so the
-    operator survives run-to-fixpoint depths (8-15 rounds on real
-    graphs), not just the fixed-round demo.
-    """
-    from pyspark.sql import functions as F
-
-    und = edges.select("s", "d").union(
-        edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct().transform(lineage_cut)
-    for _ in range(rounds):
-        deg = und.groupBy("s").agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("s")
-        und = (
-            und.join(keep, "s", "semi")
-            .join(keep.withColumnRenamed("s", "d"), "d", "semi")
-        ).transform(lineage_cut)
-    return und.groupBy(F.col("s").alias("id")).agg(
-        F.count("*").alias("degree")
-    )
-
-
 def kcore_fixpoint(
     edges: DataFrame,
     k: int,
     max_rounds: int = 50,
     assert_rounds: int | None = None,
 ) -> DataFrame:
-    """Exact k-core: run :func:`kcore_prune` rounds until no node is
-    dropped (fixpoint), bounded by ``max_rounds`` as a runaway guard.
+    """k-core peeling over an undirected edge list ``(s, d)``: each
+    synchronous round drops every node whose CURRENT degree is below
+    ``k`` (and the edges touching it), simultaneously, until a round
+    drops nothing (the fixpoint: the exact k-core) or ``max_rounds``
+    rounds have run.  Returns the surviving ``(id, degree)`` frame.
+
+    A small ``max_rounds`` is the fixed-round, engine-replayable form:
+    its oracle unrolls the same ``max_rounds`` rounds, and stopping
+    early at the fixpoint gives the same rows because a round at the
+    fixpoint is the identity.
 
     ``assert_rounds``: if set, RAISE when convergence needs more than
     this many pruning rounds.  The oracle twin of the gate query
@@ -316,20 +232,22 @@ def kcore_fixpoint(
     the gate query pins the unroll here and a deeper graph fails
     loudly instead of silently diverging from its oracle.
 
-    This is the form a production graph pipeline actually needs — the
-    fixed-round variant exists for engine-replayable oracle checks;
-    this one is the real decomposition.  The driver-side loop state is
-    a single edge ``count()`` per round (cheap over the just-
-    checkpointed partitions, no extra shuffle; edge count unchanged ⇔
-    fixpoint, because every node present in the edge list has degree
-    ≥ 1, so dropping any node removes ≥ 1 edge), never row data, and
-    lineage is cut per round with lineage_cut so the executed
-    plan stays O(1) deep at any depth.  Converges in at most |V|
-    rounds; in practice degeneracy-ordered graphs finish in <15.
+    Scale shape per round: one degree aggregate (map-combined) + two
+    semi-joins to keep edges whose BOTH endpoints survive.  The
+    driver-side loop state is a single edge ``count()`` per round (edge
+    count unchanged ⇔ fixpoint, because every node present in the edge
+    list has degree ≥ 1, so dropping any node removes ≥ 1 edge), never
+    row data.  Each round references the previous survivor set three
+    times (degree agg + two semi-join probes), so lineage is cut per
+    round with lineage_cut: the unrolled plan would grow ~3^rounds
+    (134 Exchanges at 3 rounds), the cut one stays O(1) deep at any
+    depth.  Converges in at most |V| rounds; in practice
+    degeneracy-ordered graphs finish in <15.
     """
-    und = edges.select("s", "d").union(
-        edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct().transform(lineage_cut)
+    # the count IS the materialization of every lazy cut here (r13) —
+    # one job instead of checkpoint + count; the three next-round
+    # consumers then read the materialized partitions.
+    und = _symmetric(edges, "s", "d", eager=False)
     n_prev = und.count()
     for rnd in range(1, max_rounds + 1):
         deg = und.groupBy("s").agg(F.count("*").alias("deg"))
@@ -338,9 +256,6 @@ def kcore_fixpoint(
             und.join(keep, "s", "semi")
             .join(keep.withColumnRenamed("s", "d"), "d", "semi")
         ).transform(lambda d: lineage_cut(d, eager=False))
-        # the count IS the round's materialization (lazy cut, r13) —
-        # one job per round instead of checkpoint + count; the three
-        # next-round consumers then read the materialized partitions.
         n = und.count()
         if n == n_prev:
             break
@@ -377,26 +292,19 @@ def _large_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _small_star(e: DataFrame, pre_oriented: bool = False) -> DataFrame:
-    """Kiveris small-star: orient each edge to (larger, smaller); every
-    node connects its smaller-or-equal neighbourhood (itself included)
-    to that neighbourhood's minimum.
+def _small_star(e: DataFrame) -> DataFrame:
+    """Kiveris small-star over ``_large_star``'s output: every node
+    connects its smaller-or-equal neighbourhood (itself included) to
+    that neighbourhood's minimum.
 
-    ``pre_oriented=True`` (r13) skips the orient+distinct exchange
-    when the input is ALREADY oriented-and-distinct — which
-    ``_large_star`` output provably is: its rows are (old_v, m) with
-    m = least(min_nbr, old_u) <= old_u < old_v, so u > v strictly on
-    every row (greatest/least are the identity), and it ends in its
-    own ``.distinct()``.  Fusing small∘large on that proof removes one
-    |E|-row shuffle per WCC round.
+    The input must already be oriented (u > v on every row) and
+    distinct, which ``_large_star`` output provably is: its rows are
+    (old_v, m) with m = least(min_nbr, old_u) <= old_u < old_v, and it
+    ends in its own ``.distinct()``.  Fusing small∘large on that proof
+    drops the orient+distinct exchange, one |E|-row shuffle per WCC
+    round.
     """
-    oriented = (
-        e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        if pre_oriented
-        else e.select(
-            F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
-        ).distinct()
-    )
+    oriented = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     mins = oriented.groupBy("a").agg(F.min("b").alias("mb"))
     joined = oriented.join(mins, "a")
     kids = joined.filter(F.col("b") != F.col("mb")).select(
@@ -424,7 +332,11 @@ def wcc_star(
     SHRINKS every round (each large-star hooks whole neighbourhoods
     onto local minima), which is the property that matters at 100 TB:
     late rounds touch a fraction of the original edges.  Convergence
-    is O(log² n) rounds worst-case, O(log n) in practice.
+    is O(log² n) rounds worst-case, O(log n) in practice.  Measured at
+    sf1 on 4 cores, the accepted-pairs graph of er_entity_groups (1.4M
+    edges in dense clusters) took 9.5-11.9 s here against 11.2-16.3 s
+    in the label-table form, and the whole query 17.3-19.6 s against
+    22.2-28.3 s; on the sf0.1 trade graph the two query walls overlap.
 
     Both star ops are min-AGGREGATES joined back on the grouping key —
     partial-aggregated, combiner-friendly, skew-safe (a hub node's min
@@ -452,10 +364,8 @@ def wcc_star(
         # Lazy cut + immediate count (r13): the count IS the round's
         # materialization, so each round runs ONE job instead of a
         # checkpoint job followed by a count job; the plan is still
-        # truncated at build time.  _small_star fuses on _large_star's
-        # oriented-and-distinct output (see its docstring) — one
-        # fewer |E|-row exchange per round.
-        e = _small_star(_large_star(e), pre_oriented=True).transform(
+        # truncated at build time.
+        e = _small_star(_large_star(e)).transform(
             lambda d: lineage_cut(d, eager=False)
         )
         n = e.count()
@@ -482,24 +392,42 @@ def ppr_int(
     iters: int = 3,
     scale: int = 10**12,
 ) -> DataFrame:
-    """Personalized PageRank in integer micro-units: identical
-    arithmetic to :func:`pagerank_int` except ALL teleport mass (and
-    all initial mass) goes to the SEED set — ``is_seed`` is a
-    Column-builder ``id_col -> BooleanColumn`` evaluated as a pure
-    expression, so the seed set is plan-replayable by an oracle.  The
-    result ranks nodes by proximity to the seeds (the random surfer
-    restarts AT a seed), the standard similarity-to-a-set score behind
-    "more like these" retrieval and seed-expansion labeling.
+    """(id, rank) after ``iters`` synchronous personalized-PageRank
+    rounds in integer micro-units (rank mass ``scale`` split over the
+    seed set), so the result is bit-identical across engines and
+    cluster layouts — no floating-point sum-order sensitivity, which is
+    what makes iterative rank scores normally impossible to
+    value-check distributively.
 
-    Same per-round scale shape as pagerank_int (one node-partitioned
-    join + one partial agg, lineage cut per round); mass conservation
-    in integer units is inherited (floor-division dust excepted).
+    ``is_seed`` is a Column-builder ``id_col -> BooleanColumn``
+    evaluated as a pure expression, so the seed set is plan-replayable
+    by an oracle.  ALL teleport mass and all initial mass go to the
+    seeds: the result ranks nodes by proximity to the seeds (the random
+    surfer restarts AT a seed), the standard similarity-to-a-set score
+    behind "more like these" retrieval and seed-expansion labeling.
+    ``lambda c: F.lit(True)`` makes every node a seed, which is plain
+    PageRank.
+
+    Arithmetic per round, with S the seed count (all non-negative
+    BIGINT, overflow-safe for scale<=1e12 since 85*sum_contrib <=
+    85*scale ~ 8.5e13 << 2^63):
+        rank0(u)    = scale div S            if u is a seed, else 0
+        contrib(v)  = rank(v) div out_deg(v)
+        rank'(u)    = (15*scale div 100) div S   if u is a seed, else 0
+                      + (85 * sum_{v->u} contrib(v)) div 100
+    Dangling nodes never exist because the input is symmetrized (and
+    deduplicated) internally — the standard undirected-PageRank
+    formulation for influence scoring on similarity/co-occurrence
+    graphs; passing already-symmetric edges is a no-op.  A directed
+    formulation would silently leak rank mass at dst-only nodes.  Mass
+    is conserved in integer units, floor-division dust excepted.
+
+    Scale shape per round: one shuffle join (ranks onto edge sources,
+    partitioned by node id) + one partial-aggregated groupBy(dst) —
+    the same as :func:`connected_components`'s hook step; lineage cut
+    per round.  The driver never sees row data.
     """
-    fwd = edges.select(F.col(edges.columns[0]).alias("s"),
-                       F.col(edges.columns[1]).alias("d"))
-    sym = fwd.unionByName(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct().transform(lineage_cut)
+    sym = _symmetric(edges, edges.columns[0], edges.columns[1])
     deg = sym.groupBy("s").agg(F.count("*").alias("deg"))
     nodes = (
         sym.select(F.col("s").alias("id"))
@@ -540,8 +468,10 @@ def ppr_int(
                 .cast("bigint")
                 .alias("rank"),
             )
-            # lazy cut (r13): same single-consumer chain argument as
-            # pagerank_int — all rounds compute in the final job.
+            # lazy cut (r13): fixed-iteration loop with no per-round
+            # action and ONE consumer of each round's output — the
+            # final action computes the whole chain in one job while
+            # the plan stays truncated per round.
             .transform(lambda d: lineage_cut(d, eager=False))
         )
     return ranks

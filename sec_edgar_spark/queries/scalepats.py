@@ -26,7 +26,7 @@ from pyspark.sql.functions import broadcast
 
 from ..catalog import table
 from ..operators.bloom import bloom_prefilter
-from ..operators.graph import pagerank_int
+from ..operators.graph import ppr_int
 from ..operators.zorder import morton_key, morton_key_sql
 from .registry import query
 
@@ -83,9 +83,28 @@ _PR_EDGES_SQL = """
 """
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer↔supplier bipartite trade graph ``(s, d)`` every
+    trade-graph query reads (suppliers offset by 1e6 into a shared id
+    space) — _PR_EDGES_SQL is its oracle twin."""
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    l = table(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 50 == 0
+    ).select("l_orderkey", "l_suppkey")
+    return (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .select(
+            F.col("o_custkey").alias("s"),
+            (F.lit(1000000) + F.col("l_suppkey")).alias("d"),
+        )
+        .distinct()
+    )
+
+
 def _pr_round(prev: str, out: str) -> str:
     """One integer-PageRank round as SQL (mirrors operators/graph.py
-    pagerank_int arithmetic exactly: BIGINT floor division via //)."""
+    ppr_int arithmetic with every node a seed exactly: BIGINT floor
+    division via //)."""
     return f"""
     {out} AS (
       SELECT n.id,
@@ -128,30 +147,20 @@ def _pr_round(prev: str, out: str) -> str:
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 influence scores on the customer<->supplier trade graph
-    (operators/graph.py pagerank_int, 3 synchronous rounds).  Every
-    operation is non-negative BIGINT — rank mass 1e12 micro-units —
-    so the scores are bit-identical regardless of partitioning, task
-    order, or engine: the only way an iterative rank is value-checkable
-    at all.  The oracle unrolls the same three rounds as CTEs.
+    (operators/graph.py ppr_int with every node a seed, 3 synchronous
+    rounds).  Every operation is non-negative BIGINT — rank mass 1e12
+    micro-units — so the scores are bit-identical regardless of
+    partitioning, task order, or engine: the only way an iterative rank
+    is value-checkable at all.  The oracle unrolls the same three rounds as CTEs.
 
     Scale shape: per round one node-id-partitioned join + one partial
     agg (same as connected components); the edge sample keeps the gate
     fast while the operator itself is size-agnostic.
     """
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 50 == 0
-    ).select("l_orderkey", "l_suppkey")
-    raw = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(1000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
+    # every node a seed; ppr_int symmetrizes internally (undirected)
+    ranks = ppr_int(
+        _trade_edges(spark, sf_dir), lambda c: F.lit(True), 3, _PR_SCALE
     )
-    # pagerank_int symmetrizes internally (undirected formulation)
-    ranks = pagerank_int(raw, iters=3, scale=_PR_SCALE)
     return ranks.orderBy(F.desc("rank"), "id").limit(20)
 
 
@@ -199,19 +208,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import label_propagation
 
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 50 == 0
-    ).select("l_orderkey", "l_suppkey")
-    raw = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(1000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
-    labels = label_propagation(raw, iters=3)
+    labels = label_propagation(_trade_edges(spark, sf_dir), "s", "d", 3)
     return labels.groupBy(F.col("community")).agg(
         F.count("*").alias("n_members")
     )
@@ -1686,8 +1683,8 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcore_round(prev: str, out: str, k: int) -> str:
-    """One synchronous k-core pruning round as SQL (mirrors
-    operators/graph.kcore_prune: drop nodes with degree < k and their
+    """One synchronous k-core pruning round as SQL (mirrors one round of
+    operators/graph.kcore_fixpoint: drop nodes with degree < k and their
     edges, simultaneously)."""
     return f"""
     {out} AS (
@@ -1714,35 +1711,20 @@ def _kcore_round(prev: str, out: str, k: int) -> str:
     """,
 )
 def graph_kcore_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three synchronous 3-core pruning rounds on the customer↔supplier
-    trade graph (operators/graph.kcore_prune) — the density-peeling
-    primitive behind community cores and spam-cluster isolation, in
-    the fixed-round engine-replayable form (the oracle unrolls the
-    same rounds as CTEs; run to fixpoint the surviving subgraph is the
-    exact 3-core).  Per round: one map-combined degree aggregate + two
-    semi-joins — the same iterative-join shape as components and LPA,
-    linear in surviving edges.
+    """At most three synchronous 3-core pruning rounds on the
+    customer↔supplier trade graph (operators/graph.kcore_fixpoint capped
+    at max_rounds=3) — the density-peeling primitive behind community
+    cores and spam-cluster isolation, in the fixed-round
+    engine-replayable form.  The oracle unrolls exactly three rounds as
+    CTEs; the operator stops earlier only at the fixpoint, where a
+    further round is the identity, so both give the same rows.  Per
+    round: one map-combined degree aggregate + two semi-joins — the
+    same iterative-join shape as components and LPA, linear in
+    surviving edges.
     """
-    from ..operators.graph import kcore_prune
+    from ..operators.graph import kcore_fixpoint
 
-    return kcore_prune(_trade_edges(spark, sf_dir), k=3, rounds=3)
-
-
-def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The customer↔supplier bipartite trade graph both k-core queries
-    peel (suppliers offset by 1e6 into a shared id space)."""
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 50 == 0
-    ).select("l_orderkey", "l_suppkey")
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("s"),
-            (F.lit(1000000) + F.col("l_suppkey")).alias("d"),
-        )
-        .distinct()
-    )
+    return kcore_fixpoint(_trade_edges(spark, sf_dir), k=3, max_rounds=3)
 
 
 @query(
@@ -2440,19 +2422,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import ppr_int
 
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 50 == 0
-    ).select("l_orderkey", "l_suppkey")
-    raw = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(1000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
-    ranks = ppr_int(raw, lambda c: c < 100, iters=3, scale=_PR_SCALE)
+    ranks = ppr_int(_trade_edges(spark, sf_dir), lambda c: c < 100, 3, _PR_SCALE)
     return (
         ranks.filter(F.col("id") >= 100)
         .orderBy(F.desc("rank"), "id")
@@ -2755,18 +2725,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: symmetrized-edge degree count (one node-keyed agg),
     then a ≤64-bucket histogram.
     """
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 50 == 0
-    ).select("l_orderkey", "l_suppkey")
-    raw = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("s"),
-            (F.lit(1000000) + F.col("l_suppkey")).alias("d"),
-        )
-        .distinct()
-    )
+    raw = _trade_edges(spark, sf_dir)
     sym = raw.unionByName(
         raw.select(F.col("d").alias("s"), F.col("s").alias("d"))
     ).distinct()

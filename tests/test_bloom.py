@@ -9,7 +9,7 @@ from sec_edgar_spark.operators.bloom import (
     bloom_might_contain,
     bloom_prefilter,
 )
-from sec_edgar_spark.operators.graph import pagerank_int
+from sec_edgar_spark.operators.graph import ppr_int
 
 
 def test_no_false_negatives(spark):
@@ -74,7 +74,7 @@ def test_pagerank_ring_symmetry(spark):
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    ranks = pagerank_int(sym, iters=3).collect()
+    ranks = ppr_int(sym, lambda c: F.lit(True), iters=3).collect()
     assert len(ranks) == n
     assert len({r["rank"] for r in ranks}) == 1
 
@@ -88,7 +88,10 @@ def test_pagerank_mass_is_stable(spark):
     sym = star.unionByName(
         star.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    got = {r["id"]: r["rank"] for r in pagerank_int(sym, iters=3).collect()}
+    got = {
+        r["id"]: r["rank"]
+        for r in ppr_int(sym, lambda c: F.lit(True), iters=3).collect()
+    }
     hub, leaves = got[0], [got[i] for i in range(1, 9)]
     assert all(hub > l for l in leaves)
     assert len(set(leaves)) == 1  # leaves are symmetric

@@ -37,10 +37,10 @@ def test_parallel_ntile_empty_and_single_row(spark):
 
 
 def test_pagerank_empty_edges(spark):
-    from sec_edgar_spark.operators.graph import pagerank_int
+    from sec_edgar_spark.operators.graph import ppr_int
 
     empty = spark.createDataFrame([], "src long, dst long")
-    assert pagerank_int(empty, iters=2).count() == 0
+    assert ppr_int(empty, lambda c: F.lit(True), iters=2).count() == 0
 
 
 def test_label_propagation_self_loop_only(spark):

@@ -23,6 +23,9 @@ def test_chain_collapses_to_min(spark):
 def test_two_components(spark):
     got = _cc(spark, [(5, 6), (10, 11), (11, 12)])
     assert got == {5: 5, 6: 5, 10: 10, 11: 10, 12: 10}
+    # a node whose only edge is a self-loop is its own component, as in
+    # the recursive-CTE oracles
+    assert _cc(spark, [(7, 7), (1, 2)]) == {7: 7, 1: 1, 2: 1}
 
 
 def test_direction_and_duplicates_irrelevant(spark):

@@ -81,14 +81,14 @@ def test_kcore_survivors_have_min_degree(spark):
 def test_kcore_fixpoint_is_exact_core_and_converges_fast(spark):
     """The fixpoint form must (a) satisfy the exact k-core contract —
     EVERY survivor's within-subgraph degree >= k, no same-round-death
-    dips — and (b) equal the fixed-round form once rounds >= the
+    dips — and (b) equal the form capped at 4 rounds once rounds >= the
     convergence depth (2 on this graph), which also certifies the
-    oracle's 6-round over-unroll (pruning is idempotent at fixpoint)."""
+    oracle's 4-round over-unroll (pruning is idempotent at fixpoint)."""
     from sec_edgar_spark.queries.scalepats import (
         _trade_edges,
         graph_kcore_fixpoint,
     )
-    from sec_edgar_spark.operators.graph import kcore_prune
+    from sec_edgar_spark.operators.graph import kcore_fixpoint
 
     fx = {
         (r.id, r.degree)
@@ -98,7 +98,7 @@ def test_kcore_fixpoint_is_exact_core_and_converges_fast(spark):
     assert all(deg >= 3 for _, deg in fx)  # exact-core contract
     unrolled = {
         (r.id, r.degree)
-        for r in kcore_prune(_trade_edges(spark, SF_DIR), k=3, rounds=4)
+        for r in kcore_fixpoint(_trade_edges(spark, SF_DIR), k=3, max_rounds=4)
         .collect()
     }
     assert fx == unrolled

@@ -42,8 +42,8 @@ sys.path.insert(0, ".")
 # change regenerates its pin via `python tools/plan_audit.py
 # --emit-pins`; a silent regression (lost broadcast, extra repartition,
 # unrolled loop without lineage truncation — the class that produced
-# kcore_prune's 134-Exchange 3^rounds plan before its localCheckpoint
-# fix) fails with the exact delta.  Hard-enforced by
+# the k-core loop's 134-Exchange 3^rounds plan before its per-round
+# localCheckpoint) fails with the exact delta.  Hard-enforced by
 # tests/test_plan_audit.py over the whole registry.
 PINS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_pins.json")
 

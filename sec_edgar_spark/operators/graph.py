@@ -352,12 +352,12 @@ def wcc_star(
     (node, component-min) and every center is its component's min, so
     the result needs no extra propagation pass.
     """
-    e = (
+    base = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
         .distinct()
         .transform(lambda d: lineage_cut(d, eager=False))
     )
+    e = base.filter(F.col("u") != F.col("v"))
     n_prev = -1
     for _ in range(max_rounds):
         prev_e = e
@@ -376,13 +376,16 @@ def wcc_star(
         raise ValueError(
             f"wcc_star: not converged after {max_rounds} rounds"
         )
-    centers = e.select(F.col("v").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
-    )
+    # Every edge (u, v) is (node, component-min), every center v is its
+    # own min, and a node whose only edge is a self-loop is its own
+    # component (the recursive-CTE oracles seed reach with (s, s)).  A
+    # node is never smaller than its component's min, so min() keeps
+    # the real component of a self-loop node that has other edges too.
     return (
-        e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-        .unionByName(centers)
-        .distinct()
+        e.unionByName(e.select(F.col("v").alias("u"), "v"))
+        .unionByName(base.filter(F.col("u") == F.col("v")))
+        .groupBy(F.col("u").alias("id"))
+        .agg(F.min("v").alias("component"))
     )
 
 

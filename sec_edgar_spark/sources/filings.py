@@ -1,4 +1,4 @@
-"""Filing-blob source + patterned sink (SURVEY §2.1 S11-S14).
+"""Filing-blob source + the patterned file-tree sink (SURVEY §2.1 S11-S14).
 
 The reference's network path (async aiohttp fetch under a ≤10 req/s
 global rate limit, client.py:221-277) is deliberately isolated here:
@@ -13,11 +13,16 @@ global rate limit, client.py:221-277) is deliberately isolated here:
   a token pool (``Pacer``) — still expressed as a DataFrame transform.
   Tests inject a fake ``http_get`` and, for the pacing rule, a fake
   clock.
+- **Sink**: ``save_filings`` writes the ``{cik}/{type}/…`` tree with the
+  two-phase contract of sources/_manifest.py — tasks write and report
+  their files, the driver commits ``_MANIFEST`` once the job succeeded,
+  and ``manifest_files`` is the reader view.
 """
 
 from __future__ import annotations
 
 import heapq
+import os
 import threading
 import time
 from collections import deque
@@ -33,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import _manifest
 
 FETCH_RESULT = StructType(
     [
@@ -192,10 +199,14 @@ def save_filings(
     dir_pattern: str = "{cik}/{type}",
     file_pattern: str = "{accession_number}",
 ) -> None:
-    """S13 patterned file-tree sink (daily.py:134-166 etc.).
+    """S13 patterned file-tree sink (daily.py:134-166 etc.), two-phase.
 
-    Builds the save path as a codegen'd expression (C13) and writes via
-    foreachPartition — distributed, no driver loop.
+    Builds the save path as a codegen'd expression (C13).  One job, no
+    driver loop: each task writes its rows' files (tmp + ``os.replace``)
+    and returns their paths; only after every task succeeded does the
+    driver commit ``<directory>/_MANIFEST`` listing exactly those files
+    (sources/_manifest.py).  ``content`` may be bytes (``binaryFile``)
+    or str (written as UTF-8).
     """
     from ..functions.scalars import save_path
 
@@ -212,20 +223,31 @@ def save_filings(
         for name, col in cols.items()
         if "{" + name + "}" in dir_pattern + "/" + file_pattern
     }
-    with_path = df.withColumn(
-        "_save_path",
-        F.concat(F.lit(directory.rstrip("/") + "/"), save_path(dir_pattern, file_pattern + ".txt", **needed)),
+    target = F.concat(
+        F.lit(directory.rstrip("/") + "/"),
+        save_path(dir_pattern, file_pattern + ".txt", **needed),
     )
+    written = df.select(target, "content").rdd.mapPartitions(_write_files).collect()
+    _manifest.commit(directory, sorted(set(written)))
 
-    def write_part(rows: Iterator[Row]) -> None:
-        import os
 
-        for row in rows:
-            p = row["_save_path"]
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            content = row["content"]
-            mode = "wb" if isinstance(content, (bytes, bytearray)) else "w"
-            with open(p, mode) as fh:
-                fh.write(content)
+def _write_files(rows: Iterable[tuple[str, bytes | str]]) -> list[str]:
+    """Task side of ``save_filings``: write each (path, content) row,
+    return the paths written.  A task attempt that dies here leaves its
+    files on disk but never reaches the manifest."""
+    written = []
+    for path, content in rows:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _manifest.write_atomic(path, content)
+        written.append(path)
+    return written
 
-    with_path.foreachPartition(write_part)
+
+def manifest_files(root: str) -> list[str]:
+    """The committed files of a ``save_filings`` write — the
+    all-or-nothing reader view.  Orphan files from failed or zombie
+    task attempts may exist on disk but are never listed.  Raises
+    FileNotFoundError when no commit has completed: a tree without a
+    manifest is an uncommitted (failed) write."""
+    with open(os.path.join(root, _manifest.MANIFEST)) as fh:
+        return fh.read().splitlines()

@@ -2,8 +2,10 @@
 
 The reference fetches one ``master.idx`` text per quarter/day and parses
 it with a per-line regex loop (core/_index.py:117-178).  Here the scan
-is a schema'd CSV read over a *mirror* of the index files (any number of
-quarters/days in one DataFrame), with:
+is a JVM text read over a *mirror* of the index files (any number of
+quarters/days in one DataFrame), parsed by ``idx_rows`` — the one row
+rule, which the daily-feed stream (streaming/daily_feed.py) shares —
+with:
 
 - F1 validity filter: the ~10-line banner + ``----`` separator rows are
   dropped by a typed-row predicate equivalent to the reference's
@@ -52,12 +54,19 @@ def read_master_idx(
             F.input_file_name().alias("source_file"),
         )
     )
-    raw = _lineno.with_line_numbers(raw, "source_file")
+    return idx_rows(_lineno.with_line_numbers(raw, "source_file"))
 
+
+def idx_rows(raw: DataFrame) -> DataFrame:
+    """The master.idx row rule, for the batch scan and the daily-feed
+    stream alike: a text scan (``value`` plus pass-through columns such
+    as ``source_file`` and ``line_no``) → typed filing-index rows
+    (cik, company_name, form_type, date_filed, file_name, path,
+    accession_number, then the pass-through columns)."""
+    keep = [c for c in raw.columns if c != "value"]
     parts = F.split(F.col("value"), r"\|")
     parsed = raw.select(
-        "source_file",
-        "line_no",
+        *keep,
         F.element_at(parts, 1).alias("cik_raw"),
         F.element_at(parts, 2).alias("company_name"),
         F.element_at(parts, 3).alias("form_type"),
@@ -69,15 +78,15 @@ def read_master_idx(
     # regex ``^[0-9]+[|].+[|].+[|][0-9\-]+[|].+$`` (_index.py:161-162)
     # requires every middle field non-empty (``.+``), so empty
     # company/form/file fields must be rejected too.
+    file_name = F.regexp_replace(F.col("file_name_raw"), r"[\r\n]+$", "")
     valid = parsed.filter(
         (F.col("n_fields") == 5)
         & F.col("cik_raw").rlike("^[0-9]+$")
         & F.col("date_raw").rlike("^[0-9-]+$")
         & (F.col("company_name") != "")
         & (F.col("form_type") != "")
-        & (F.regexp_replace(F.col("file_name_raw"), r"[\r\n]+$", "") != "")
+        & (file_name != "")
     )
-    file_name = F.regexp_replace(F.col("file_name_raw"), r"[\r\n]+$", "")
     return valid.select(
         F.col("cik_raw").cast("long").alias("cik"),
         "company_name",
@@ -86,8 +95,7 @@ def read_master_idx(
         file_name.alias("file_name"),
         S.archives_path(file_name).alias("path"),
         S.accession_number(file_name).alias("accession_number"),
-        "source_file",
-        "line_no",
+        *keep,
     )
 
 

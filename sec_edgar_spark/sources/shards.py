@@ -12,9 +12,9 @@ DataFrame, distributed:
   endian) plus ``<root>/shard-<key>.idx.json`` (sequence offsets);
 - tasks return one manifest row each; the driver commits
   ``<root>/_MANIFEST`` listing every shard with its sequence/token
-  counts — the same all-or-nothing two-phase contract as the
-  filing_tree DataSource writer (sources/pyds.py): readers that key on
-  the manifest never see a partial export.
+  counts — the same all-or-nothing two-phase contract (sources/
+  _manifest.py) as the filing-tree sink ``filings.save_filings``:
+  readers that key on the manifest never see a partial export.
 
 Tokenization here is the repo's deterministic md5-bucket fake (the
 real tokenizer is an injectable kernel like the multimodal decoders —
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from . import _manifest
 
 DTYPE_WIDTH = 2  # token-id byte width; wired to both the bound check
 DTYPE = f"<u{DTYPE_WIDTH}"  # ...and the on-disk little-endian format
@@ -100,18 +101,11 @@ def write_token_shards(
             pos += len(a)
         flat = np.concatenate(arrs)
         path = os.path.join(root, f"shard-{key}.bin")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(flat.tobytes())
-        os.replace(tmp, path)
-        # idx gets the same atomic tmp+rename as the .bin: a zombie
-        # duplicate attempt must never leave a torn index behind a
-        # manifest-listed shard
-        ipath = os.path.join(root, f"shard-{key}.idx.json")
-        itmp = ipath + ".tmp"
-        with open(itmp, "w") as fh:
-            json.dump({"offsets": offsets, "n_tokens": int(pos)}, fh)
-        os.replace(itmp, ipath)
+        _manifest.write_atomic(path, flat.tobytes())
+        _manifest.write_atomic(
+            os.path.join(root, f"shard-{key}.idx.json"),
+            json.dumps({"offsets": offsets, "n_tokens": int(pos)}),
+        )
         return pd.DataFrame(
             {
                 "shard": [key],
@@ -128,35 +122,25 @@ def write_token_shards(
         )
         .collect()  # bounded: one row per SHARD, not per sequence
     )
-    # Manifest commits atomically (tmp + os.replace), the same
-    # discipline as the .bin/.idx files: an in-place truncate-write
-    # could expose a torn manifest to a concurrent reader, silently
-    # shrinking the visible export.  The tmp name is pid-suffixed so
-    # two writers pointed at the SAME root (a shared
-    # spark.sec_edgar.shard_root) interleave into separate tmp files
-    # and each os.replace publishes one writer's complete manifest —
-    # last-writer-wins, never a mixed file (code review r8).
-    mpath = os.path.join(root, "_MANIFEST")
-    mtmp = f"{mpath}.tmp.{os.getpid()}"
-    with open(mtmp, "w") as fh:
-        for r in sorted(manifest_rows, key=lambda r: r["shard"]):
-            fh.write(
-                json.dumps(
-                    {
-                        "shard": r["shard"],
-                        "n_seqs": r["n_seqs"],
-                        "n_tokens": r["n_tokens"],
-                        "file": os.path.basename(r["file"]),
-                    }
-                )
-                + "\n"
+    _manifest.commit(
+        root,
+        (
+            json.dumps(
+                {
+                    "shard": r["shard"],
+                    "n_seqs": r["n_seqs"],
+                    "n_tokens": r["n_tokens"],
+                    "file": os.path.basename(r["file"]),
+                }
             )
-    os.replace(mtmp, mpath)
+            for r in sorted(manifest_rows, key=lambda r: r["shard"])
+        ),
+    )
     return len(manifest_rows)
 
 
 def read_manifest(root: str) -> list[dict]:
-    with open(os.path.join(root, "_MANIFEST")) as fh:
+    with open(os.path.join(root, _manifest.MANIFEST)) as fh:
         return [json.loads(ln) for ln in fh if ln.strip()]
 
 

@@ -4,8 +4,10 @@ The reference is batch-only, but its daily index is a natural stream:
 one ``master.YYYYMMDD.idx`` appears per business day (daily.py:103-106).
 This module expresses the feed as a Structured Streaming file source —
 new idx drops in a watched directory are discovered per micro-batch,
-parsed with the SAME projection logic as the batch scan, and rolled up
-with event-time windows + watermark for late files.
+parsed by the same function as the batch scan (``sources.index.idx_rows``:
+one split, validity predicate and projection, so the stream rejects
+exactly the rows the batch scan rejects), and rolled up with event-time
+windows + watermark for late files.
 
 Capability extension, not a port requirement; batch/stream parity is
 the test: the streaming rollup over N files must equal the batch
@@ -17,40 +19,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import scalars as S
+from ..sources.index import idx_rows
 
 
 def read_daily_feed(spark: SparkSession, watch_dir: str) -> DataFrame:
-    """readStream over a directory of daily master.idx drops."""
+    """readStream over a directory of daily master.idx drops, parsed by
+    the batch scan's own row rule (``sources.index.idx_rows``)."""
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 16)
         .load(watch_dir)
         .select(F.col("value"), F.input_file_name().alias("source_file"))
     )
-    parts = F.split(F.col("value"), r"\|")
-    parsed = raw.select(
-        "source_file",
-        F.element_at(parts, 1).alias("cik_raw"),
-        F.element_at(parts, 2).alias("company_name"),
-        F.element_at(parts, 3).alias("form_type"),
-        F.element_at(parts, 4).alias("date_raw"),
-        F.element_at(parts, 5).alias("file_name"),
-        F.size(parts).alias("n_fields"),
-    )
-    valid = parsed.filter(
-        (F.col("n_fields") == 5)
-        & F.col("cik_raw").rlike("^[0-9]+$")
-        & F.col("date_raw").rlike("^[0-9-]+$")
-    )
-    return valid.select(
-        F.col("cik_raw").cast("long").alias("cik"),
-        "company_name",
-        "form_type",
-        S.parse_idx_date("date_raw").alias("date_filed"),
-        "file_name",
-        "source_file",
-    )
+    return idx_rows(raw)
 
 
 def daily_rollup(feed: DataFrame, watermark_days: int = 3) -> DataFrame:

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from sec_edgar_spark.plans.filings import filings, grouped_urls
 from sec_edgar_spark.sources.cik_map import read_cik_map
-from sec_edgar_spark.sources.filings import fetch_urls, save_filings
+from sec_edgar_spark.sources.filings import fetch_urls, manifest_files, save_filings
 from sec_edgar_spark.sources.index import read_master_idx
 
 SGML = """<SEC-DOCUMENT>0000320193-96-000001.txt
@@ -68,6 +68,8 @@ def test_full_save_workflow(spark, tmp_path):
     save_filings(enriched, str(out))
     saved = list(out.rglob("*.txt"))
     assert saved, "no files written"
+    # the committed manifest lists exactly the files on disk
+    assert set(manifest_files(str(out))) == {str(p) for p in saved}
     # dir pattern {cik}/{type}
     assert all("320193" in str(p) and "10-K" in str(p) for p in saved)
 

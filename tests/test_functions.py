@@ -51,15 +51,6 @@ def test_date_tokens(spark):
     # pre-1998 daily era MM-dd-yyyy (ADVICE r5: docstring/impl parity)
     assert str(one(spark, S.parse_idx_date(F.lit("07-01-1994")))) == "1994-07-01"
     assert one(spark, S.parse_idx_date(F.lit("garbage"))) is None
-    # the pyds twin agrees on all three shapes
-    import datetime
-
-    from sec_edgar_spark.sources.pyds import _parse_date
-
-    assert _parse_date("1996-12-19") == datetime.date(1996, 12, 19)
-    assert _parse_date("20240115") == datetime.date(2024, 1, 15)
-    assert _parse_date("07-01-1994") == datetime.date(1994, 7, 1)
-    assert _parse_date("garbage") is None
 
 
 def test_cik_zfill_and_keys(spark):

@@ -187,10 +187,11 @@ def test_wcc_star_max_rounds_raises(spark):
 
 
 def test_wcc_star_self_loops_and_singletons(spark):
-    # self-loops are dropped (u != v filter), so a node with ONLY a
-    # self-loop does not appear; the isolated pair is unaffected
-    got = _wcc(spark, [(7, 7), (1, 2)])
-    assert got == {1: 1, 2: 1}
+    # a node with ONLY a self-loop is its own component, as in the
+    # recursive-CTE oracles and connected_components; a self-loop on a
+    # node with other edges does not change its component
+    got = _wcc(spark, [(7, 7), (1, 2), (2, 2)])
+    assert got == {7: 7, 1: 1, 2: 1}
 
 
 def test_reliable_checkpoint_path_matches_local(spark, tmp_path):
